@@ -212,20 +212,20 @@ def _pack_stage(selected: DataFrame, budget: int, n_shards: int) -> DataFrame:
     )
 
 
-def corpus_plan(docs: DataFrame, materialize: bool = True, **overrides) -> DataFrame:
+def corpus_plan(docs: DataFrame, **overrides) -> DataFrame:
     """The full chain as one plan — the contract-query / oracle
     surface. ``docs`` is a documents table (doc_id int, text, source,
     lang); returns one row per document that survives every gate:
     (doc_id, source, lang_guess, quality, split, shard, batch_id,
     n_tokens).
 
-    ``materialize`` (default on) localCheckpoints the two fan-out
-    points — the extracted corpus (referenced by signals, dedup,
-    selection, and packing: uncheckpointed, the Python extraction
-    kernel re-executes once per reference, measured ~5x the wall) and
-    the selected set (referenced by packing twice, which would replay
-    the dedup closure). ``build_corpus`` gets the same effect from its
-    per-stage parquet materialization.
+    The plan localCheckpoints its two fan-out points — the extracted
+    corpus (referenced by signals, dedup, selection, and packing:
+    uncheckpointed, the Python extraction kernel re-executes once per
+    reference, measured ~5x the wall) and the selected set (referenced
+    by packing twice, which would replay the dedup closure).
+    ``build_corpus`` gets the same effect from its per-stage parquet
+    materialization.
 
     Fault-tolerance note: ``localCheckpoint`` stores blocks on the
     executors, so it survives task retries but NOT executor loss — the
@@ -235,9 +235,7 @@ def corpus_plan(docs: DataFrame, materialize: bool = True, **overrides) -> DataF
     pass ``checkpoint_dir`` to the dedup stage for reliable
     ``checkpoint()`` (see ``dedup.dedup_clusters``)."""
     cfg = {**DEFAULTS, **overrides}
-    cdocs = _extract_stage(docs)
-    if materialize:
-        cdocs = cdocs.localCheckpoint()
+    cdocs = _extract_stage(docs).localCheckpoint()
     if (
         cfg["scrub_pii"]
         or cfg["drop_paragraph_occurrences"] is not None
@@ -248,9 +246,7 @@ def corpus_plan(docs: DataFrame, materialize: bool = True, **overrides) -> DataF
             cfg["scrub_pii"],
             cfg["drop_paragraph_occurrences"],
             cfg["scrub_dup_ngrams"],
-        )
-        if materialize:
-            cdocs = cdocs.localCheckpoint()
+        ).localCheckpoint()
     # signals inline: quality and lang_guess are pure projections, so
     # they ride the document rows directly instead of materializing a
     # separate signals frame and joining it back (2 exchanges saved)
@@ -270,9 +266,7 @@ def corpus_plan(docs: DataFrame, materialize: bool = True, **overrides) -> DataF
         cfg["default_frac"],
         cfg["test_frac"],
     )
-    if materialize:
-        selected = selected.localCheckpoint()
-    return _pack_stage(selected, cfg["budget"], cfg["n_shards"])
+    return _pack_stage(selected.localCheckpoint(), cfg["budget"], cfg["n_shards"])
 
 
 # ---------------------------------------------------------------------------

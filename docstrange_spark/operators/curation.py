@@ -15,18 +15,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import text_analysis
+from .partitioning import _md5_long28, sharded_top_k
 
 # 7 hex chars = 28 bits: the md5-prefix-to-integer trick used across
 # the engine (both engines compute identical values)
 _HEX7 = float(16**7)
-
-
-def _md5_long28(col):
-    """First 7 hex digits of md5(col) as a long — the engine's portable
-    28-bit hash (DuckDB twin: ``('0x' || substr(md5(x), 1, 7))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(col.cast("string")), 1, 7), 16, 10).cast(
-        "long"
-    )
 
 
 def _uniform_hash(col, salt: str):
@@ -115,7 +108,6 @@ def decontaminate(
     window: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     winnowed k-gram fingerprint with an eval/benchmark set (the overlap
@@ -125,18 +117,17 @@ def decontaminate(
     winnow_fingerprints``: every shared substring of length >= k+window-1
     is guaranteed to share a fingerprint). The eval set is tiny next to
     a 100 TB corpus, so its fingerprints broadcast — the train side
-    never shuffles for the join; set ``broadcast_eval=False`` when the
-    eval set itself is large. Returns one row per contaminated training
-    doc: (doc_id, n_shared_fps).
+    never shuffles for the join. Returns one row per contaminated
+    training doc: (doc_id, n_shared_fps).
     """
     train_fps = text_analysis.winnow_fingerprints(
         docs, k=k, window=window, id_col=id_col, text_col=text_col
     )
-    eval_fps = text_analysis.winnow_fingerprints(
-        eval_docs, k=k, window=window, id_col=id_col, text_col=text_col
-    ).select(F.col("fp").alias("eval_fp")).distinct()
-    if broadcast_eval:
-        eval_fps = F.broadcast(eval_fps)
+    eval_fps = F.broadcast(
+        text_analysis.winnow_fingerprints(
+            eval_docs, k=k, window=window, id_col=id_col, text_col=text_col
+        ).select(F.col("fp").alias("eval_fp")).distinct()
+    )
     return (
         train_fps.join(eval_fps, train_fps["fp"] == eval_fps["eval_fp"], "inner")
         .groupBy("doc_id")
@@ -150,7 +141,6 @@ def ngram_decontaminate(
     n: int = 13,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Word n-gram benchmark decontamination — the GPT-3 / FineWeb
     13-gram practice (public knowledge), complementing the winnowing
@@ -176,9 +166,7 @@ def ngram_decontaminate(
         ).distinct()
 
     train_g = grams(docs)
-    eval_g = grams(eval_docs).select("gram").distinct()
-    if broadcast_eval:
-        eval_g = F.broadcast(eval_g)
+    eval_g = F.broadcast(grams(eval_docs).select("gram").distinct())
     per_doc = train_g.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_ngrams")
     )
@@ -300,25 +288,16 @@ def source_cap(
     id tiebreak — the per-domain cap web corpora apply so one crawl
     host can't dominate the training mix.
 
-    Skew-safe two-phase top-N: a single window partitioned only by
-    source would funnel a mega-domain (half a web crawl can be one
-    host) through one task. Phase 1 ranks within ``(source, shard)`` —
-    ``shard`` an md5 hash of the id mod ``n_shards`` — keeping
-    ``per_source`` rows per shard, so the heaviest task sees
-    ~|domain| / n_shards rows; phase 2 re-ranks the at most
-    ``n_shards * per_source`` survivors per source. Output is
-    IDENTICAL to the single-window formulation (any doc in a source's
-    global top-N is in its shard's top-N — the ordering is a total
-    order via the id tiebreak), which is what the DuckDB oracle
-    computes. ``n_shards`` should be >= the cluster's task slots;
-    ``n_shards=1`` degenerates to the single-phase plan. Returns
-    (source, doc_id, quality, src_rank) with ``src_rank`` the global
-    per-source rank.
+    Skew-safe: a mega-domain (half a web crawl can be one host) is
+    ranked by :func:`partitioning.sharded_top_k` over ``(source,
+    md5(doc_id) % n_shards)`` shards, so the heaviest task sees
+    ~|domain| / n_shards rows. Output is IDENTICAL to the single-window
+    formulation (the ordering is a total order via the id tiebreak),
+    which is what the DuckDB oracle computes. ``n_shards`` should be >=
+    the cluster's task slots; ``n_shards=1`` degenerates to the
+    single-phase plan. Returns (source, doc_id, quality, src_rank) with
+    ``src_rank`` the global per-source rank.
     """
-    if per_source < 1:
-        raise ValueError(f"per_source must be >= 1 (got {per_source})")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1 (got {n_shards})")
     if quality_col is not None:
         # the caller already carries a quality column (e.g. a
         # materialized signals stage) — rank on it instead of
@@ -332,22 +311,14 @@ def source_cap(
         q = text_analysis.quality_score(
             df, id_col=id_col, text_col=text_col, keep=(source_col,)
         ).select(F.col(source_col).alias("source"), "doc_id", "quality")
-    order = (F.desc("quality"), F.asc("doc_id"))
-    if n_shards > 1:
-        w1 = Window.partitionBy("source", "_shard").orderBy(*order)
-        q = (
-            q.withColumn("_shard", _md5_long28(F.col("doc_id")) % n_shards)
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= per_source)
-            .drop("_shard", "_r1")
-        )
-    w2 = Window.partitionBy("source").orderBy(*order)
-    return q.select(
-        "source",
-        "doc_id",
-        "quality",
-        F.row_number().over(w2).cast("long").alias("src_rank"),
-    ).where(F.col("src_rank") <= per_source)
+    return sharded_top_k(
+        q,
+        (F.desc("quality"), F.asc("doc_id")),
+        per_source,
+        n_shards,
+        F.col("doc_id"),
+        partition_by=("source",),
+    ).select("source", "doc_id", "quality", F.col("rank").alias("src_rank"))
 
 
 def doc_frequency(
@@ -386,8 +357,6 @@ def tfidf_top_terms(
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_idf: bool = True,
-    materialize_tf: bool = True,
 ) -> DataFrame:
     """Top-k TF-IDF keywords per document — the per-doc feature the
     vocabulary statistics feed (topic tagging, keyword filters, cheap
@@ -398,10 +367,8 @@ def tfidf_top_terms(
 
     Plan shape: term counts aggregate with map-side combine; the IDF
     table is vocabulary-sized, tiny next to the corpus, so it joins as
-    a BROADCAST by default — the per-doc term table never shuffles for
-    the join. Pass ``broadcast_idf=False`` for a vocabulary too large
-    to broadcast (then it's a plain shuffle join on the term). The
-    top-k window partitions by doc_id — high cardinality, no skew
+    a BROADCAST — the per-doc term table never shuffles for the join.
+    The top-k window partitions by doc_id — high cardinality, no skew
     funnel. Returns (doc_id, term, tf, idf, tfidf, term_rank).
     """
     if k < 1:
@@ -419,10 +386,8 @@ def tfidf_top_terms(
     # doc_frequency's array_distinct-then-explode count. The two
     # consumers prune tf differently, so Catalyst does NOT reuse the
     # exchange (verified on the executed plan) — localCheckpoint makes
-    # the single tokenization pass explicit; disable to stay fully
-    # lazy at the cost of tokenizing twice
-    if materialize_tf:
-        tf = tf.localCheckpoint()
+    # the single tokenization pass explicit
+    tf = tf.localCheckpoint()
     n = df.agg(F.count("*").alias("n_docs"))
     idf = (
         tf.groupBy("term")
@@ -433,9 +398,7 @@ def tfidf_top_terms(
             F.round(F.log(F.col("n_docs") / F.col("doc_freq")), 6).alias("idf"),
         )
     )
-    if broadcast_idf:
-        idf = F.broadcast(idf)
-    scored = tf.join(idf, "term").withColumn(
+    scored = tf.join(F.broadcast(idf), "term").withColumn(
         "tfidf", F.round(F.col("tf") * F.col("idf"), 6)
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
@@ -453,7 +416,6 @@ def unigram_logprob(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_freq: bool = True,
 ) -> DataFrame:
     """Language-model quality proxy (CCNet-style LM filtering, Wenzek
     et al. 2020 — public knowledge; a corpus-unigram model stands in
@@ -463,9 +425,8 @@ def unigram_logprob(
     training pipelines drop the tail.
 
     Scale shape: one corpus pass builds the (token, count) frequency
-    table — vocabulary-sized, so it re-joins as a BROADCAST by default
-    (``broadcast_freq=False`` for an over-large vocabulary ⇒ shuffle
-    join); the total token count joins as a broadcast scalar. Returns
+    table — vocabulary-sized, so it re-joins as a BROADCAST; the total
+    token count joins as a broadcast scalar. Returns
     (doc_id, n_tokens, mean_logprob) for every document with at least
     one token (empty docs have no distribution to score).
     """
@@ -476,10 +437,8 @@ def unigram_logprob(
     freq = toks.groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("total"))
     freq = freq.crossJoin(F.broadcast(total))
-    if broadcast_freq:
-        freq = F.broadcast(freq)
     return (
-        toks.join(freq, "token")
+        toks.join(F.broadcast(freq), "token")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
@@ -495,7 +454,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    broadcast_hist: bool = True,
 ) -> DataFrame:
     """Bigram language-model score per document — the next step up
     from :func:`unigram_logprob` toward the KenLM-style perplexity
@@ -513,8 +471,7 @@ def bigram_logprob(
 
     Scale shape: the bigram count table is corpus-transition-sized, so
     its re-join is a plain shuffle join on (w1, w2) — correctly NOT
-    broadcast; the history table is vocabulary-sized and broadcasts by
-    default (``broadcast_hist=False`` for an over-large vocabulary);
+    broadcast; the history table is vocabulary-sized and broadcasts;
     V joins as a broadcast scalar. The bigram stream itself is built
     in-projection from the token array (zero extra shuffle before the
     counting groupBys).
@@ -538,15 +495,13 @@ def bigram_logprob(
     )
     c2 = bg.groupBy("w1", "w2").agg(F.count("*").cast("long").alias("c2"))
     hist = bg.groupBy("w1").agg(F.count("*").cast("long").alias("c1"))
-    if broadcast_hist:
-        hist = F.broadcast(hist)
     vocab = (
         base.select(F.explode("toks").alias("token"))
         .agg(F.countDistinct("token").cast("long").alias("v"))
     )
     scored = (
         bg.join(c2, ["w1", "w2"])
-        .join(hist, "w1")
+        .join(F.broadcast(hist), "w1")
         .crossJoin(F.broadcast(vocab))
         .withColumn(
             "lp",
@@ -809,7 +764,6 @@ def quality_bins(
     n_bins: int = 1000,
     tail_frac: float = 1.0 / 3.0,
     head_frac: float = 1.0 / 3.0,
-    broadcast_freq: bool = True,
     scored: DataFrame | None = None,
 ) -> DataFrame:
     """CCNet-style per-language quality binning (Wenzek et al. 2020 —
@@ -846,7 +800,7 @@ def quality_bins(
     contract-vs-materialized split as search vs search_materialized).
     """
     if scored is None:
-        scored = unigram_logprob(df, id_col, text_col, broadcast_freq).join(
+        scored = unigram_logprob(df, id_col, text_col).join(
             df.select(
                 F.col(id_col).alias("doc_id"), F.col(lang_col).alias("lang")
             ),
@@ -919,7 +873,6 @@ def dsir_weights(
     target_col: str = "is_target",
     n_buckets: int = 4096,
     smoothing: float = 1.0,
-    broadcast_weights: bool = True,
 ) -> DataFrame:
     """Data Selection with Importance Resampling (Xie et al. 2023 —
     public knowledge): score every document by how much more likely its
@@ -939,8 +892,7 @@ def dsir_weights(
 
     Scale shape: two bucket-sized aggregations (map-side partial
     combine), a bucket-keyed weight table of ``n_buckets`` rows that
-    re-joins as a BROADCAST (``broadcast_weights=False`` for an
-    over-large bucket count ⇒ shuffle join), one per-doc aggregation.
+    re-joins as a BROADCAST, one per-doc aggregation.
     No shuffle carries text. Documents with fewer than two tokens have
     no bigram profile and are omitted (same contract as
     ``unigram_logprob``).
@@ -983,10 +935,8 @@ def dsir_weights(
             - F.log((F.col("r_cnt") + sm) / (F.col("r_tot") + smb))
         ).alias("lw"),
     )
-    if broadcast_weights:
-        weights = F.broadcast(weights)
     return (
-        b.join(weights, "bucket")
+        b.join(F.broadcast(weights), "bucket")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_grams"),
@@ -1316,42 +1266,26 @@ def top_vocabulary(
     occurrences (not just the top-k's).
 
     Scale shape: token counts aggregate with map-side combine; the
-    global top-k uses the skew-safe two-phase rank (per-shard top-k on
-    an md5 shard of the token, then re-rank <= n_shards*k survivors —
-    a web-scale vocabulary never funnels one task); the coverage
-    window runs over the k surviving rows only, with the corpus total
-    joined as a broadcast scalar.
+    global top-k is :func:`partitioning.sharded_top_k` on an md5 shard
+    of the token (a web-scale vocabulary never funnels one task); the
+    coverage window runs over the k surviving rows only, with the
+    corpus total joined as a broadcast scalar.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1 (got {k})")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1 (got {n_shards})")
     toks = df.select(
         F.explode(text_analysis.nonempty_tokens(text_col)).alias("token")
     )
     counts = toks.groupBy("token").agg(F.count("*").cast("long").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     order = (F.desc("cnt"), F.asc("token"))
-    ranked = counts
-    if n_shards > 1:
-        w1 = Window.partitionBy("_shard").orderBy(*order)
-        ranked = (
-            ranked.withColumn("_shard", _md5_long28(F.col("token")) % n_shards)
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= k)
-            .drop("_shard", "_r1")
-        )
-    # final re-rank runs on <= n_shards*k survivor rows BY CONSTRUCTION
-    # (each shard emitted at most k) — a bounded single-partition sort,
-    # not a global sort of the vocabulary. partitionBy(lit(0)) marks the
-    # intent in the source; Catalyst folds the constant away, so the
-    # "No Partition Defined for Window" warning is instead demoted at
-    # the logger in session.get_spark (see PLANS.md).
-    w2 = Window.partitionBy(F.lit(0)).orderBy(*order)
-    wcum = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # running coverage over the k survivors, on the re-rank's own window
+    # spec so it reuses that sort
+    wcum = (
+        Window.partitionBy(F.lit(0))
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
     return (
-        ranked.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= k)
+        sharded_top_k(counts, order, k, n_shards, F.col("token"))
         .withColumn("_cum", F.sum("cnt").over(wcum))
         .crossJoin(F.broadcast(total))
         .select(
@@ -1704,13 +1638,9 @@ def token_drift(
     semantics).
 
     Scale shape: one map-side-combined count aggregation; totals join
-    as a 1-row broadcast; the global top-k is the skew-safe two-phase
-    rank (per-md5-shard top-k, re-rank <= n_shards*top_k survivors).
+    as a 1-row broadcast; the global top-k is
+    :func:`partitioning.sharded_top_k` on an md5 shard of the token.
     """
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1 (got {top_k})")
-    if n_shards < 1:
-        raise ValueError(f"n_shards must be >= 1 (got {n_shards})")
     toks = df.select(
         side_expr.cast("boolean").alias("side_a"),
         F.explode(text_analysis.nonempty_tokens(text_col)).alias("token"),
@@ -1742,19 +1672,4 @@ def token_drift(
         F.round(share_a - share_b, 6).alias("delta"),
     )
     order = (F.desc(F.abs(F.col("delta"))), F.asc("token"))
-    ranked = d
-    if n_shards > 1:
-        w1 = Window.partitionBy("_shard").orderBy(*order)
-        ranked = (
-            ranked.withColumn("_shard", _md5_long28(F.col("token")) % n_shards)
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= top_k)
-            .drop("_shard", "_r1")
-        )
-    # bounded single-partition re-rank over <= n_shards*top_k survivors
-    # (same justification as top_vocabulary)
-    w2 = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        ranked.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= top_k)
-    )
+    return sharded_top_k(d, order, top_k, n_shards, F.col("token"))

@@ -1,13 +1,12 @@
 """Navigation operators N1-N9 over markdown documents.
 
-Two implementations, deliberately:
-
-- a **relational** path (pure DataFrame ops: posexplode + windows +
-  aggregates) — the idiomatic-Spark form used by the oracle-checked
-  queries; whole plan stays JVM-side in codegen;
-- a **kernel** path (mapInPandas over the sections kernel) for pipeline
-  composition after extraction and for ops that are not expressible
-  relationally (greedy chunking, recursive hierarchy).
+Sections, search and document info are **relational** (pure DataFrame
+ops: array transforms, windows, aggregates) — the oracle-checked form,
+whole plan JVM-side in codegen. ``sections_relational`` is the one Spark
+section derivation; the pure ``kernels.sections.split_sections`` is its
+reference semantics and test oracle. Only the ops that are not
+expressible relationally (greedy chunking, recursive hierarchy) run the
+pure kernels inside mapInPandas.
 
 Reference semantics: ``/root/reference/mcp_server_module/server.py``
 (section split :94-145, hierarchy :147-182, chunking :184-220, search
@@ -31,11 +30,6 @@ from docstrange_spark.kernels.sections import (
 )
 
 HEADER_REGEX = r"^#{1,6}\s+.+$"
-
-SECTION_SCHEMA = (
-    "doc_id string, section_idx int, level int, title string, content string, "
-    "start_line int, end_line int, token_count int"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -62,11 +56,11 @@ def sections_relational(
     group-agg formulation paid 3 exchanges for the same rows — removed
     in round 6, guide §2.4 "remove shuffles outright").
 
-    Matches the kernel's MCP semantics: a section spans its header line
-    up to the line before the next header; pre-first-header lines belong
-    to no section; a header-less document is one level-0
-    "Document Content" section covering every line; an exactly-empty
-    document yields no section at all.
+    Matches the MCP semantics of ``kernels.sections.split_sections``: a
+    section spans its header line up to the line before the next
+    header; pre-first-header lines belong to no section; a header-less
+    document is one level-0 "Document Content" section covering every
+    line; an exactly-empty document yields no section at all.
 
     The line array and header-position array are materialized as
     projection columns before the per-section transform so each is
@@ -286,33 +280,7 @@ def section_summary_col(content_col: str = "content", max_length: int = 200):
 
 
 # ---------------------------------------------------------------------------
-# kernel path
-
-
-def _sections_kernel(batches: Iterator[pd.DataFrame], token_mode: str = "approx") -> Iterator[pd.DataFrame]:
-    cols = [
-        "doc_id", "section_idx", "level", "title", "content",
-        "start_line", "end_line", "token_count",
-    ]
-    set_token_counter(token_mode)  # executes ON the worker
-    for pdf in batches:
-        rows = []
-        for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-            for i, s in enumerate(split_sections(md or "")):
-                rows.append(
-                    (doc_id, i, s["level"], s["title"], s["content"],
-                     s["start_line"], s["end_line"], s["token_count"])
-                )
-        yield pd.DataFrame(rows, columns=cols)
-
-
-def sections_kernel(df: DataFrame, token_mode: str = "approx") -> DataFrame:
-    """Section table via the N1 kernel (exact MCP walker). ``token_mode``
-    selects the token counter INSIDE the Python workers ('approx' golden
-    default, 'tiktoken' when importable on executors)."""
-    return df.select("doc_id", "markdown").mapInPandas(
-        lambda b: _sections_kernel(b, token_mode), schema=SECTION_SCHEMA
-    )
+# kernel path (not expressible relationally)
 
 
 CHUNK_SCHEMA = (

@@ -13,10 +13,11 @@ float addition order can't drift between engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import text_analysis
+from .partitioning import sharded_top_k
 
 MICRO = 1_000_000.0
 
@@ -121,16 +122,14 @@ def bm25_search(
     as broadcast scalars; per-term idf is a query-term-sized broadcast.
     Per-document contributions are rounded to integer micro-units and
     summed exactly (bit-stable across engines and partition orders).
-    The global top-k is the skew-safe two-phase rank (per-shard top-k,
-    then re-rank the <= n_shards*top_k survivors) — never a full sort.
+    The global top-k is :func:`partitioning.sharded_top_k` on an md5
+    shard of the doc id — never a full sort.
     Returns (doc_id, score, rank). Terms are lowercased to match the
     token stream.
     """
     terms = sorted({t.lower() for t in terms})
     if not terms:
         raise ValueError("terms must be non-empty")
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1 (got {top_k})")
     lens = df.select(
         F.col(id_col).alias("doc_id"),
         F.size(text_analysis.nonempty_tokens(text_col))
@@ -189,32 +188,13 @@ def bm25_search(
     scored = contrib.groupBy("doc_id").agg(
         F.round(F.sum("c") / F.lit(MICRO), 6).alias("score")
     )
-    order = (F.desc("score"), F.asc("doc_id"))
-    if n_shards > 1:
-        w1 = Window.partitionBy("_shard").orderBy(*order)
-        scored = (
-            scored.withColumn(
-                "_shard",
-                F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 7), 16, 10)
-                .cast("long")
-                % n_shards,
-            )
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= top_k)
-            .drop("_shard", "_r1")
-        )
-    # final re-rank runs on <= n_shards*top_k survivor rows BY
-    # CONSTRUCTION (each shard emitted at most top_k) — a bounded
-    # single-partition sort, not a global sort of the corpus scores.
-    # partitionBy(lit(0)) marks the intent in the source; Catalyst
-    # folds the constant away, so the warning is demoted at the logger
-    # in session.get_spark (see PLANS.md).
-    w2 = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= top_k)
-        .select("doc_id", "score", "rank")
-    )
+    return sharded_top_k(
+        scored,
+        (F.desc("score"), F.asc("doc_id")),
+        top_k,
+        n_shards,
+        F.col("doc_id"),
+    ).select("doc_id", "score", "rank")
 
 
 def phrase_search(

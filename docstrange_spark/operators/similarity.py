@@ -182,7 +182,6 @@ def embedding_dedup_pairs(
     max_bucket_size: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    id_only_candidates: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (a, b, cosine) for every
     LSH-bucket-sharing pair with rounded cosine >= threshold, a < b.
@@ -195,57 +194,26 @@ def embedding_dedup_pairs(
     buckets link consecutive members only, preserving the cluster's
     connected component with linear output.
 
-    ``id_only_candidates`` (default, the 100 TB shape) generates the
-    candidate pairs with ``lsh_bucket_candidates`` — only id scalars
-    cross the bucket shuffle — then re-joins the distinct pairs to the
-    vectors for the exact re-rank, computing each pair's cosine ONCE
-    instead of once per colliding table. ``False`` keeps the original
-    vector-carrying bucket self-join (one fewer join when vectors are
-    tiny). Both produce identical output."""
+    Candidate pairs come from ``lsh_bucket_candidates`` — only id
+    scalars cross the bucket shuffle — and the distinct pairs re-join
+    the vectors for the exact re-rank, computing each pair's cosine
+    ONCE instead of once per colliding table."""
     base = embeddings.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     ).withColumn("nrm", _norm(F.col("vec")))
-    if id_only_candidates:
-        pairs = lsh_bucket_candidates(
-            embeddings, n_planes, n_tables, max_bucket_size, id_col, vec_col
-        )
-        va = base.select(
-            F.col("vid").alias("vid_a"), F.col("vec").alias("vec_a"),
-            F.col("nrm").alias("nrm_a"),
-        )
-        vb = base.select(
-            F.col("vid").alias("vid_b"), F.col("vec").alias("vec_b"),
-            F.col("nrm").alias("nrm_b"),
-        )
-        joined = pairs.join(va, "vid_a").join(vb, "vid_b")
-    else:
-        flat = base.select(
-            "vid", "vec", "nrm",
-            F.posexplode(_bucket_udf(n_planes, n_tables)(F.col("vec"))).alias(
-                "tbl", "bucket"
-            ),
-        )
-        if max_bucket_size is not None:
-            w = Window.partitionBy("tbl", "bucket")
-            sized = flat.withColumn("bsize", F.count("*").over(w))
-            small = sized.where(F.col("bsize") <= max_bucket_size).drop("bsize")
-            wchain = Window.partitionBy("tbl", "bucket").orderBy("vid")
-            big = sized.where(F.col("bsize") > max_bucket_size)
-            chain = big.select(
-                "tbl", "bucket",
-                F.lag("vid").over(wchain).alias("vid_a"),
-                F.lag("vec").over(wchain).alias("vec_a"),
-                F.lag("nrm").over(wchain).alias("nrm_a"),
-                F.col("vid").alias("vid_b"),
-                F.col("vec").alias("vec_b"),
-                F.col("nrm").alias("nrm_b"),
-            ).where(F.col("vid_a").isNotNull())
-            joined = _bucket_pair_join(small).unionByName(
-                chain.select("vid_a", "vec_a", "nrm_a", "vid_b", "vec_b", "nrm_b")
-            )
-        else:
-            joined = _bucket_pair_join(flat)
+    pairs = lsh_bucket_candidates(
+        embeddings, n_planes, n_tables, max_bucket_size, id_col, vec_col
+    )
+    va = base.select(
+        F.col("vid").alias("vid_a"), F.col("vec").alias("vec_a"),
+        F.col("nrm").alias("nrm_a"),
+    )
+    vb = base.select(
+        F.col("vid").alias("vid_b"), F.col("vec").alias("vec_b"),
+        F.col("nrm").alias("nrm_b"),
+    )
+    joined = pairs.join(va, "vid_a").join(vb, "vid_b")
     scored = joined.select(
         F.col("vid_a").alias("doc_a"),
         F.col("vid_b").alias("doc_b"),
@@ -258,22 +226,6 @@ def embedding_dedup_pairs(
         scored.where(F.col("cosine") >= threshold)
         .groupBy("doc_a", "doc_b")
         .agg(F.max("cosine").alias("cosine"))
-    )
-
-
-def _bucket_pair_join(flat: DataFrame) -> DataFrame:
-    a = flat.select(
-        "tbl", "bucket",
-        F.col("vid").alias("vid_a"), F.col("vec").alias("vec_a"),
-        F.col("nrm").alias("nrm_a"),
-    )
-    b = flat.select(
-        "tbl", "bucket",
-        F.col("vid").alias("vid_b"), F.col("vec").alias("vec_b"),
-        F.col("nrm").alias("nrm_b"),
-    )
-    return a.join(b, ["tbl", "bucket"]).where(F.col("vid_a") < F.col("vid_b")).select(
-        "vid_a", "vec_a", "nrm_a", "vid_b", "vec_b", "nrm_b"
     )
 
 
@@ -301,20 +253,24 @@ def ivf_centroids(dim: int, n_cells: int = 16) -> np.ndarray:
     return mat
 
 
-def _probe_udf(centroids: np.ndarray, nprobe: int):
+def _probe_udf(centroids: np.ndarray | None, nprobe: int, n_cells: int = 16):
     """vec -> the nprobe nearest cell ids (squared-L2, ties by cell id).
     The centroid matrix ships in the UDF closure (k x dim floats — for
-    very large k, move it to a Spark broadcast)."""
+    very large k, move it to a Spark broadcast). ``centroids=None``
+    builds the ``n_cells`` md5 seed centroids worker-side from the row
+    dimensionality (no driver action), as :func:`_assign_batches`
+    does."""
     from pyspark.sql.functions import pandas_udf
 
-    C = np.ascontiguousarray(centroids)
-    cn = (C * C).sum(axis=1)
+    C0 = None if centroids is None else np.ascontiguousarray(centroids)
 
     @pandas_udf("array<int>")
     def probes(vecs: pd.Series) -> pd.Series:
         if vecs.empty:
             return pd.Series([], dtype=object)
         X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+        C = C0 if C0 is not None else ivf_centroids(X.shape[1], n_cells)
+        cn = (C * C).sum(axis=1)
         d = cn[None, :] - 2.0 * (X @ C.T)  # ||x||^2 constant per row
         order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series([row.astype("int32").tolist() for row in order])
@@ -352,14 +308,9 @@ def knn_ivf(
     ).withColumn("nrm", _norm(F.col("vec")))
     # query side: filter FIRST (the IN pushes into the scan), then run
     # the nprobe probe UDF over the handful of query rows only
-    probe = (
-        _probe_udf_lazy(n_cells, nprobe)
-        if centroids is None
-        else _probe_udf(centroids, nprobe)
-    )
     q = (
         base.where(F.col("vid").isin(query_ids))
-        .withColumn("probes", probe(F.col("vec")))
+        .withColumn("probes", _probe_udf(centroids, nprobe, n_cells)(F.col("vec")))
         .select(
             F.col("vid").alias("query_id"),
             F.col("vec").alias("qvec"),
@@ -388,25 +339,6 @@ def knn_ivf(
             "cosine",
         )
     )
-
-
-def _probe_udf_lazy(n_cells: int, nprobe: int):
-    """Probe UDF building the default md5 centroids on the worker from
-    the row dimensionality (no driver-side action)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<int>")
-    def probes(vecs: pd.Series) -> pd.Series:
-        if vecs.empty:
-            return pd.Series([], dtype=object)
-        X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        C = ivf_centroids(X.shape[1], n_cells)
-        cn = (C * C).sum(axis=1)
-        d = cn[None, :] - 2.0 * (X @ C.T)
-        order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    return probes
 
 
 def ivf_train(
@@ -742,12 +674,8 @@ def semantic_dedup(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
-    if centroids is None:
-        probe = _probe_udf_lazy(n_cells, 1)
-    else:
-        probe = _probe_udf(centroids, 1)
     assigned = base.withColumn(
-        "cell", F.element_at(probe(F.col("vec")), 1)
+        "cell", F.element_at(_probe_udf(centroids, 1, n_cells)(F.col("vec")), 1)
     )
     # fan-out point: the assignment feeds both the scoring kernel and
     # the output projection; without a checkpoint the pandas UDF would

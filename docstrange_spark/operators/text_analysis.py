@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import sharded_top_k
+
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is", "it", "for", "on")
 
 # tiny deterministic marker lexicons for the language-ID heuristic
@@ -717,13 +719,8 @@ def bpe_pair_counts(
     Scale shape: identical pieces are collapsed FIRST (one groupBy on
     the piece string — Zipf makes this the big reduction), then char
     bigrams explode from the distinct-piece table weighted by piece
-    count; the global top-k is the same skew-safe two-phase sharded
-    rank as :func:`curation.top_vocabulary` (per-shard row_number <= k,
-    then a bounded re-rank over <= n_shards*k survivors)."""
-    from docstrange_spark.operators.curation import _md5_long28
-
-    if top_k < 1:
-        raise ValueError(f"top_k must be >= 1 (got {top_k})")
+    count; the global top-k is :func:`partitioning.sharded_top_k` on
+    an md5 shard of the symbol pair."""
     pieces = df.select(
         F.explode(
             F.regexp_extract_all(
@@ -760,27 +757,13 @@ def bpe_pair_counts(
         .groupBy("left_sym", "right_sym")
         .agg(F.sum("cnt").cast("long").alias("pair_count"))
     )
-    order = (F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym"))
-    ranked = agg
-    if n_shards > 1:
-        w1 = Window.partitionBy("_shard").orderBy(*order)
-        ranked = (
-            ranked.withColumn(
-                "_shard",
-                _md5_long28(F.concat_ws("|", "left_sym", "right_sym"))
-                % n_shards,
-            )
-            .withColumn("_r1", F.row_number().over(w1))
-            .where(F.col("_r1") <= top_k)
-            .drop("_shard", "_r1")
-        )
-    # bounded re-rank: <= n_shards*top_k survivor rows by construction
-    w2 = Window.partitionBy(F.lit(0)).orderBy(*order)
-    return (
-        ranked.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .where(F.col("rank") <= top_k)
-        .select("left_sym", "right_sym", "pair_count", "rank")
-    )
+    return sharded_top_k(
+        agg,
+        (F.desc("pair_count"), F.asc("left_sym"), F.asc("right_sym")),
+        top_k,
+        n_shards,
+        F.concat_ws("|", "left_sym", "right_sym"),
+    ).select("left_sym", "right_sym", "pair_count", "rank")
 
 
 # unit separator: symbol boundary for the BPE trainer's piece

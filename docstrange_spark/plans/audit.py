@@ -52,17 +52,18 @@ Notes:
   executes ~3 shuffles + a count action per round in driver-coordinated
   jobs beforehand (O(log diameter) rounds via pointer jumping) — the
   audited numbers deliberately exclude that staged work.
-- Two-phase sharded top-k (`top_vocabulary`, `bm25_search`, and the
-  other sharded-ranking ops): phase 1 ranks WITHIN `n_shards` hash
-  shards (distributed window, row_number <= k per shard), phase 2
-  re-ranks only the <= n_shards*k survivors on a single partition
-  (`Window.partitionBy(lit(0))`). That trailing single-partition
+- Two-phase sharded top-k: `source_cap`, `top_vocabulary`,
+  `token_drift`, `bm25_search` and `bpe_pair_counts` all rank through
+  the one helper `operators.partitioning.sharded_top_k`. Phase 1 ranks
+  WITHIN `n_shards` md5 hash shards (distributed window, row_number
+  <= k per shard), phase 2 re-ranks only the <= n_shards*k survivors
+  (`source_cap` per source; the others on a single partition,
+  `Window.partitionBy(lit(0))`). That trailing single-partition
   WindowExec is bounded BY CONSTRUCTION — at n_shards=32, k=1000 it
   sorts at most 32k rows regardless of corpus size — so it is not a
-  global-sort bottleneck at 100x; the lit(0) partition key makes the
-  intent explicit and keeps Spark's "No Partition Defined for Window"
-  warning (which flags genuinely unbounded global windows) out of the
-  logs.
+  global-sort bottleneck at 100x. Catalyst folds the lit(0) key away,
+  so `session.get_spark` demotes Spark's "No Partition Defined for
+  Window" warning at the logger instead.
 - `dup_ngram_stats` / `dup_span_scrub` (exact-substring family): the
   duplicated-gram filter is a count window over the single gram-keyed
   exchange (round 6 — the earlier count-aggregate + marking join

@@ -129,40 +129,6 @@ def test_ivf_train_empty_raises(spark):
         similarity.ivf_train(empty, n_cells=2, iters=1)
 
 
-def test_embedding_dups_id_only_matches_vector_path(spark):
-    """The id-only candidate pass (bucket shuffle carries no vectors,
-    cosine computed once per distinct pair) must produce exactly the
-    vector-carrying path's output."""
-    import numpy as np
-    import pandas as pd
-
-    # 5 groups x 6 members of deterministic near-identical vectors
-    rows = []
-    for g in range(5):
-        for m in range(6):
-            v = np.zeros(16, dtype=np.float32)
-            v[g] = 1.0
-            v[(g + 5) % 16] = 0.01 * m  # tiny within-group perturbation
-            rows.append((g * 10 + m, v.tolist()))
-    embeddings = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"]),
-        "vec_id long, embedding array<float>",
-    )
-    a = {
-        (r["doc_a"], r["doc_b"], r["cosine"])
-        for r in similarity.embedding_dedup_pairs(
-            embeddings, threshold=0.8, id_only_candidates=True
-        ).collect()
-    }
-    b = {
-        (r["doc_a"], r["doc_b"], r["cosine"])
-        for r in similarity.embedding_dedup_pairs(
-            embeddings, threshold=0.8, id_only_candidates=False
-        ).collect()
-    }
-    assert a == b and a
-
-
 def test_lsh_bucket_candidates_plan_is_vector_free(spark):
     """VERDICT r2 #7: the candidate-generation subplan must never carry
     the embedding column — the hyperplane projection reads it map-side,

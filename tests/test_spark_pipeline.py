@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from docstrange_spark import datagen
 from docstrange_spark.kernels import assembly
+from docstrange_spark.kernels.sections import split_sections
 from docstrange_spark.operators import extract, navigation, renditions
 
 
@@ -67,13 +68,19 @@ def test_renditions_on_spark(extracted, ref_result):
 
 
 def test_sections_kernel_vs_relational(spark, extracted):
+    """The Spark section table equals the pure kernel run in the driver
+    on the same collected markdown."""
     md = extracted.select("doc_id", "markdown")
-    a = navigation.sections_kernel(md)
-    b = navigation.sections_relational(md)
-    cols = ["doc_id", "level", "title", "content", "start_line", "end_line", "token_count"]
-    ka = sorted(map(tuple, a.select(cols).collect()))
-    kb = sorted(map(tuple, b.select(cols).collect()))
-    assert ka == kb
+    expected = sorted(
+        (r["doc_id"], i, s["level"], s["title"], s["content"],
+         s["start_line"], s["end_line"], s["token_count"])
+        for r in md.collect()
+        for i, s in enumerate(split_sections(r["markdown"] or ""))
+    )
+    cols = ["doc_id", "section_idx", "level", "title", "content",
+            "start_line", "end_line", "token_count"]
+    got = sorted(map(tuple, navigation.sections_relational(md).select(cols).collect()))
+    assert expected and got == expected
 
 
 def test_search_relational(spark, extracted):
