@@ -40,25 +40,18 @@ def exact_groups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
 
 
 def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
-    """Word n-gram shingles, exploded: (doc_id, shingle). Generated fully
-    inside codegen (split + sequence + transform), no UDF. The input is
+    """Word n-gram shingles, exploded: (doc_id, shingle), from the shared
+    ``text_analysis.word_ngrams`` builder over the UNFILTERED token
+    stream (parity with the signature oracle), no UDF. The input is
     ``spread`` first (guide §2.5): gram construction is the expensive
     map-side stage of every signature pass, and on a low-split input
     (single-row-group parquet) it would otherwise serialize onto one
     scan task."""
+    from . import text_analysis
     from .partitioning import spread
 
     df = spread(df, id_col)
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(0), F.size(toks) - n)
-    ).otherwise(F.array().cast("array<int>"))
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + k + 1) for k in range(n)]
-        ),
-    )
+    grams = text_analysis.word_ngrams(F.split(F.lower(F.col(text_col)), " "), n)
     return df.select(
         F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
     )

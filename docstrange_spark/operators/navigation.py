@@ -4,9 +4,13 @@ Sections, search and document info are **relational** (pure DataFrame
 ops: array transforms, windows, aggregates) — the oracle-checked form,
 whole plan JVM-side in codegen. ``sections_relational`` is the one Spark
 section derivation; the pure ``kernels.sections.split_sections`` is its
-reference semantics and test oracle. Only the ops that are not
+reference semantics and test oracle; both follow Python's header regex
+and ``str.strip`` whitespace rules (``_WS`` spells them out for Java's
+regex engine). Only the ops that are not
 expressible relationally (greedy chunking, recursive hierarchy) run the
-pure kernels inside mapInPandas.
+pure kernels inside mapInPandas. These operators are the corpus-scale
+batch path; the MCP server (``serving.py``) answers per-document tools
+on a document it already holds with the same pure kernels, no Spark job.
 
 Reference semantics: ``/root/reference/mcp_server_module/server.py``
 (section split :94-145, hierarchy :147-182, chunking :184-220, search
@@ -29,7 +33,20 @@ from docstrange_spark.kernels.sections import (
     split_sections,
 )
 
-HEADER_REGEX = r"^#{1,6}\s+.+$"
+# The characters Python's ``\s`` and ``str.strip()`` treat as whitespace
+# (``str.isspace``), as a Java regex class: Java's ``\s`` and Spark's
+# ``trim`` cover only ASCII, so the kernel's header rule is spelled out.
+# ``(?s)`` lets ``.`` match ``\r`` and the other Java line terminators,
+# as Python's ``.`` does (lines hold no ``\n``).
+_WS = (
+    r"[\t\n\x{0b}\x{0c}\r\x{1c}-\x{1f} \x{85}\x{a0}\x{1680}"
+    r"\x{2000}-\x{200a}\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]"
+)
+HEADER_REGEX = rf"(?s)^#{{1,6}}{_WS}+.+$"
+_LEVEL_REGEX = rf"^(#{{1,6}}){_WS}"
+# the header title with surrounding whitespace stripped, as
+# ``HEADER_RE.match(line).group(2).strip()``
+_TITLE_REGEX = rf"(?s)^#{{1,6}}{_WS}+(.*?){_WS}*\z"
 
 
 # ---------------------------------------------------------------------------
@@ -96,12 +113,10 @@ def sections_relational(
         hline = F.element_at(lines, start)
         return F.struct(
             (k - 1).cast("int").alias("section_idx"),
-            F.length(F.regexp_extract(hline, r"^(#{1,6})\s", 1))
+            F.length(F.regexp_extract(hline, _LEVEL_REGEX, 1))
             .cast("int")
             .alias("level"),
-            F.trim(F.regexp_extract(hline, r"^#{1,6}\s+(.+)$", 1)).alias(
-                "title"
-            ),
+            F.regexp_extract(hline, _TITLE_REGEX, 1).alias("title"),
             F.array_join(F.slice(lines, start, end - start + 1), "\n").alias(
                 "content"
             ),
@@ -157,16 +172,15 @@ def search_relational(
     it with a range join (guide §2.4: two operations keyed the same way
     share one exchange). Fallbacks match the section-table semantics
     exactly: a hit above the first header gets "Unknown Section"; a hit
-    in a header-less (necessarily non-empty) document gets the
-    "Document Content" whole-doc section."""
+    in a header-less non-empty document gets the "Document Content"
+    whole-doc section; the one (empty) line of an empty document, which
+    an empty query hits, belongs to no section."""
     lines = explode_lines(df, doc_col, text_col)
     w = Window.partitionBy("doc_id").orderBy("line_no")
     wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     wall = Window.partitionBy("doc_id")
     is_header = F.col("line").rlike(HEADER_REGEX)
-    hdr_title = F.when(
-        is_header, F.trim(F.regexp_extract("line", r"^#{1,6}\s+(.+)$", 1))
-    )
+    hdr_title = F.when(is_header, F.regexp_extract("line", _TITLE_REGEX, 1))
     ctx = lines.select(
         "doc_id",
         "line_no",
@@ -183,6 +197,7 @@ def search_relational(
         ).alias("context"),
         F.last(hdr_title, ignorenulls=True).over(wcum).alias("_sec"),
         F.max(is_header.cast("int")).over(wall).alias("_has_hdr"),
+        F.count(F.lit(1)).over(wall).alias("_n_lines"),
     )
     needle = query if case_sensitive else query.lower()
     hay = F.col("line") if case_sensitive else F.lower(F.col("line"))
@@ -192,9 +207,11 @@ def search_relational(
         F.col("line").alias("line_content"),
         F.coalesce(
             F.col("_sec"),
-            F.when(F.col("_has_hdr") == 1, F.lit("Unknown Section")).otherwise(
-                F.lit("Document Content")
-            ),
+            F.when(
+                (F.col("_has_hdr") == 0)
+                & ((F.col("_n_lines") > 1) | (F.length("line") > 0)),
+                F.lit("Document Content"),
+            ).otherwise(F.lit("Unknown Section")),
         ).alias("section"),
         "context",
     )

@@ -118,83 +118,83 @@ def bm25_search(
     Robertson/Lucene idf ``ln((N - df + 0.5)/(df + 0.5) + 1)`` and the
     standard saturation ``tf*(k1+1)/(tf + k1*(1 - b + b*dl/avgdl))``.
 
-    Scale shape: document lengths are a projection; N and avgdl join
-    as broadcast scalars; per-term idf is a query-term-sized broadcast.
-    Per-document contributions are rounded to integer micro-units and
-    summed exactly (bit-stable across engines and partition orders).
-    The global top-k is :func:`partitioning.sharded_top_k` on an md5
-    shard of the doc id — never a full sort.
+    Plan shape: one scan, no posting table. A per-document projection
+    binds the token array once and emits ``dl`` plus one tf column per
+    distinct query term (the tokens ``array_remove(toks, term)`` drops),
+    so the cost is O(terms x tokens) per document. One global aggregate row
+    (N, total length, one df per term) joins back as a broadcast, and
+    the score is computed in the same projection. Per-term
+    contributions are rounded to integer micro-units and summed exactly
+    (bit-stable across engines and partition orders). The global top-k
+    is :func:`partitioning.sharded_top_k` on an md5 shard of the doc
+    id, never a full sort. Every row is one document: ids must be
+    unique (they are at every caller), a repeated id is scored as
+    separate documents.
     Returns (doc_id, score, rank). Terms are lowercased to match the
-    token stream.
+    token stream; NULL text counts in N as an empty document.
     """
     terms = sorted({t.lower() for t in terms})
     if not terms:
         raise ValueError("terms must be non-empty")
-    lens = df.select(
+    tf = [f"_tf{i}" for i in range(len(terms))]
+    toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.size(text_analysis.nonempty_tokens(text_col))
-        .cast("long")
-        .alias("dl"),
+        text_analysis.nonempty_tokens(text_col).alias("_toks"),
     )
-    tot = lens.agg(
+    dl = F.size("_toks")
+    per_doc = toks.select(
+        "doc_id",
+        dl.cast("long").alias("dl"),
+        *[
+            (dl - F.size(F.array_remove("_toks", F.lit(t)))).cast("long").alias(c)
+            for t, c in zip(terms, tf)
+        ],
+    )
+    tot = per_doc.agg(
         F.count("*").cast("long").alias("n_docs"),
         F.sum("dl").cast("long").alias("sum_dl"),
-    )
-    p = _postings(df, id_col, text_col).where(F.col("term").isin(terms))
-    tfs = p.groupBy("doc_id", "term").agg(
-        F.count("*").cast("long").alias("tf")
-    )
-    dfs = tfs.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    idf = (
-        dfs.crossJoin(F.broadcast(tot))
-        .select(
-            "term",
-            F.log(
-                (F.col("n_docs") - F.col("df") + F.lit(0.5))
-                / (F.col("df") + F.lit(0.5))
-                + F.lit(1.0)
-            ).alias("idf"),
-        )
+        *[F.count_if(F.col(c) > 0).cast("long").alias(f"_df{c}") for c in tf],
     )
     avgdl = F.col("sum_dl") / F.col("n_docs")
-    contrib = (
-        tfs.join(F.broadcast(idf), "term")
-        .join(lens, "doc_id")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            F.round(
-                (
-                    F.col("idf")
-                    * (
-                        (F.col("tf") * F.lit(float(k1) + 1.0))
-                        / (
-                            F.col("tf")
-                            + F.lit(float(k1))
-                            * (
-                                F.lit(1.0 - float(b))
-                                + F.lit(float(b)) * (F.col("dl") / avgdl)
-                            )
-                        )
-                    )
-                )
-                * F.lit(MICRO),
-                0,
-            )
-            .cast("long")
-            .alias("c"),
+
+    def contrib(c):
+        tf_c, df_c = F.col(c), F.col(f"_df{c}")
+        idf = F.log(
+            (F.col("n_docs") - df_c + F.lit(0.5)) / (df_c + F.lit(0.5))
+            + F.lit(1.0)
         )
+        sat = (tf_c * F.lit(float(k1) + 1.0)) / (
+            tf_c
+            + F.lit(float(k1))
+            * (
+                F.lit(1.0 - float(b))
+                + F.lit(float(b)) * (F.col("dl") / avgdl)
+            )
+        )
+        return F.when(
+            tf_c > 0, F.round((idf * sat) * F.lit(MICRO), 0).cast("long")
+        ).otherwise(F.lit(0).cast("long"))
+
+    total = sum(contrib(c) for c in tf)
+    # a doc without any query term scores NULL, which ranks after every
+    # scored doc and is dropped after the top-k. A where() on the tf
+    # columns instead would be pushed below the projection, tokenizing
+    # each text again inside the filter.
+    hit = F.greatest(*[F.col(c) for c in tf], F.lit(0)) > 0
+    scored = per_doc.crossJoin(F.broadcast(tot)).select(
+        "doc_id", F.when(hit, F.round(total / F.lit(MICRO), 6)).alias("score")
     )
-    scored = contrib.groupBy("doc_id").agg(
-        F.round(F.sum("c") / F.lit(MICRO), 6).alias("score")
+    return (
+        sharded_top_k(
+            scored,
+            (F.desc_nulls_last("score"), F.asc("doc_id")),
+            top_k,
+            n_shards,
+            F.col("doc_id"),
+        )
+        .where(F.col("score").isNotNull())
+        .select("doc_id", "score", "rank")
     )
-    return sharded_top_k(
-        scored,
-        (F.desc("score"), F.asc("doc_id")),
-        top_k,
-        n_shards,
-        F.col("doc_id"),
-    ).select("doc_id", "score", "rank")
 
 
 def phrase_search(
@@ -247,7 +247,7 @@ def proximity_search(
     AND) and ``phrase_search`` (distance exactly 1, ordered).
 
     One projection: both terms' position arrays are built inside the
-    row (array filters over the posexploded-free token array), and the
+    row (array filters over the token array, bound once per row), and the
     min pairwise distance is a nested array fold — cost
     O(|pos_a| * |pos_b|) per document, bounded by document length,
     zero shuffles, zero Python.
@@ -257,27 +257,29 @@ def proximity_search(
     a, b = term_a.lower(), term_b.lower()
     if not a or not b:
         raise ValueError("terms must be non-empty")
-    toks = text_analysis.nonempty_tokens(text_col)
-    idx = F.sequence(F.lit(0), F.size(toks) - 1)
+    def min_dist(toks):
+        idx = F.sequence(F.lit(0), F.size(toks) - 1)
 
-    def positions(term):
-        return F.filter(
-            idx, lambda i: F.element_at(toks, i + 1) == F.lit(term)
-        )
+        def positions(term):
+            return F.filter(
+                idx, lambda i: F.element_at(toks, i + 1) == F.lit(term)
+            )
 
-    t = df.select(
+        # both position arrays are bound, so the inner loop reads pb
+        # instead of recomputing it for every element of pa; NULL (no
+        # distance) when either term is absent
+        return text_analysis.bind(positions(a), lambda pa: text_analysis.bind(
+            positions(b),
+            lambda pb: F.array_min(F.flatten(F.transform(
+                pa, lambda p: F.transform(pb, lambda q: F.abs(p - q))
+            ))),
+        ))
+
+    out = df.select(
         F.col(id_col).alias("doc_id"),
-        positions(a).alias("pa"),
-        positions(b).alias("pb"),
-    )
-    dists = F.flatten(
-        F.transform(
-            F.col("pa"),
-            lambda p: F.transform(F.col("pb"), lambda q: F.abs(p - q)),
-        )
-    )
-    out = t.where((F.size("pa") > 0) & (F.size("pb") > 0)).select(
-        "doc_id", F.array_min(dists).cast("long").alias("min_dist")
+        text_analysis.bind(text_analysis.nonempty_tokens(text_col), min_dist)
+        .cast("long")
+        .alias("min_dist"),
     )
     return out.where(F.col("min_dist") <= window)
 

@@ -256,29 +256,45 @@ def winnow_fingerprints(
     )
 
 
+def bind(expr, fn):
+    """``fn(x)`` with ``x`` bound to ONE evaluation of ``expr`` per row.
+
+    Spark evaluates higher-order-function lambdas interpreted, with no
+    common-subexpression elimination, so an expression captured inside
+    a lambda body is recomputed for every element (a captured
+    ``split(text)`` re-splits the whole text once per gram). Passed
+    through a one-element ``transform``, ``expr`` becomes a lambda
+    variable instead."""
+    return F.element_at(F.transform(F.array(expr), fn), 1)
+
+
 def word_ngrams(toks_col, n: int):
-    """Space-joined word n-gram array from a token-array column (empty
-    when the document has fewer than ``n`` tokens) — the ONE gram
-    builder behind the Gopher repetition signals, DSIR hashing, the
-    filter chain, and phrase search, so the engines can't drift per
-    call site. (``dedup.shingles`` keeps its own copy on purpose: it
-    grams the UNFILTERED token stream for parity with its signature
-    oracle.) DuckDB twin: ``list_transform(range(len(toks)-(n-1)),
+    """Space-joined word n-gram array from a token-array column or
+    expression (empty when the document has fewer than ``n`` tokens),
+    the ONE gram builder behind the shingles, the Gopher repetition
+    signals, DSIR hashing, the filter chain, and phrase search, so the
+    engines can't drift per call site. The input is bound once
+    (:func:`bind`), so a tokenizing expression is never re-evaluated
+    per gram. DuckDB twin: ``list_transform(range(len(toks)-(n-1)),
     i -> toks[i+1] || ' ' || ... || toks[i+n])``."""
-    col = toks_col if not isinstance(toks_col, str) else F.col(toks_col)
-    sz = F.size(col)
-    return (
-        F.when(
-            sz >= n,
-            F.transform(
-                F.sequence(F.lit(0), sz - n),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(col, i + k + 1) for k in range(n)]
-                ),
+
+    def grams(toks):
+        sz = F.size(toks)
+        # the empty case is an empty INDEX array, so the gram array keeps
+        # non-null elements (an empty array<string> literal would make
+        # them nullable, and an inferred isnotnull filter then blocks
+        # exchange reuse between two references to the same grams)
+        idx = F.when(sz >= n, F.sequence(F.lit(0), sz - n)).otherwise(
+            F.array().cast("array<int>")
+        )
+        return F.transform(
+            idx,
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(toks, i + k + 1) for k in range(n)]
             ),
         )
-        .otherwise(F.array().cast("array<string>"))
-    )
+
+    return bind(F.col(toks_col) if isinstance(toks_col, str) else toks_col, grams)
 
 
 def bigrams(toks_col):
@@ -652,9 +668,9 @@ def line_filters(
     duplicate detection is O(lines²) per document, bounded by document
     size.
     """
-    ls, kept_idx = _line_filter_cols(text_col, min_words, keep_headings)
-    t = df.select(
-        F.col(id_col).alias("doc_id"), ls.alias("ls"), kept_idx.alias("ki")
+    t = df.select(F.col(id_col).alias("doc_id"), _lines(text_col).alias("ls"))
+    t = t.select(
+        "doc_id", "ls", _kept_lines(F.col("ls"), min_words, keep_headings).alias("ki")
     )
     return t.select(
         "doc_id",
@@ -667,25 +683,27 @@ def line_filters(
     )
 
 
-def _line_filter_cols(text_col: str, min_words: int, keep_headings: bool):
-    """(lines array, kept-index array) Columns for the C4 line filter —
-    shared by ``line_filters`` and the in-place
-    ``line_filter_text_expr``."""
-    ls = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-    idx = F.sequence(F.lit(0), F.size(ls) - 1)
+def _lines(text_col: str):
+    return F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
 
-    def word_count(line):
-        return F.size(F.filter(F.split(line, " "), lambda w: w != F.lit("")))
+
+def _kept_lines(ls, min_words: int, keep_headings: bool):
+    """Kept-index array of the C4 line filter over a BOUND lines array
+    ``ls`` (a column or lambda variable, never an expression the
+    per-line lambda would re-evaluate) — shared by ``line_filters`` and
+    the in-place ``line_filter_text_expr``. A line's word count is its
+    number of maximal non-space runs: the nonempty pieces of
+    ``split(line, ' ')``, without building the array."""
 
     def keeps(i):
         line = F.element_at(ls, i + 1)
         first = F.array_position(ls, line) == i + 1
-        rule = word_count(line) >= F.lit(int(min_words))
+        rule = F.regexp_count(line, F.lit("[^ ]+")) >= F.lit(int(min_words))
         if keep_headings:
             rule = rule | line.startswith("#")
         return first & rule
 
-    return ls, F.filter(idx, keeps)
+    return F.filter(F.sequence(F.lit(0), F.size(ls) - 1), keeps)
 
 
 def line_filter_text_expr(
@@ -695,9 +713,15 @@ def line_filter_text_expr(
     swapping the text column in place inside a larger plan (the
     streaming clean stage), avoiding a doc_id join back to the
     ``line_filters`` projection."""
-    ls, kept_idx = _line_filter_cols(text_col, min_words, keep_headings)
-    return F.array_join(
-        F.transform(kept_idx, lambda i: F.element_at(ls, i + 1)), "\n"
+    return bind(
+        _lines(text_col),
+        lambda ls: F.array_join(
+            F.transform(
+                _kept_lines(ls, min_words, keep_headings),
+                lambda i: F.element_at(ls, i + 1),
+            ),
+            "\n",
+        ),
     )
 
 
@@ -830,28 +854,25 @@ def bpe_train(
             F.substr(inner, F.lit(2), F.length(inner)), F.lit(S)
         ).alias("rep"),
     )
+
+    def adjacent_pairs(syms):
+        return F.when(
+            F.size(syms) >= 2,
+            F.transform(
+                F.sequence(F.lit(1), F.size(syms) - 1),
+                lambda i: F.struct(
+                    F.element_at(syms, i).alias("l"),
+                    F.element_at(syms, i + 1).alias("r"),
+                ),
+            ),
+        ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
+
+    syms = F.split(F.substr(F.col("rep"), F.lit(2), F.length("rep") - 2), S + S)
     merges = []
     for t in range(1, n_merges + 1):
-        syms = F.split(
-            F.substr(F.col("rep"), F.lit(2), F.length("rep") - 2), S + S
-        )
         pairs = (
             rep_df.select(
-                "cnt",
-                F.explode(
-                    F.when(
-                        F.size(syms) >= 2,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(syms) - 1),
-                            lambda i: F.struct(
-                                F.element_at(syms, i).alias("l"),
-                                F.element_at(syms, i + 1).alias("r"),
-                            ),
-                        ),
-                    ).otherwise(
-                        F.array().cast("array<struct<l:string,r:string>>")
-                    )
-                ).alias("pr"),
+                "cnt", F.explode(bind(syms, adjacent_pairs)).alias("pr")
             )
             .groupBy("pr.l", "pr.r")
             .agg(F.sum("cnt").cast("long").alias("c"))

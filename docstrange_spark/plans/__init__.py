@@ -73,3 +73,25 @@ def whole_stage_codegen_spans(df: DataFrame) -> int:
     """Number of WholeStageCodegen regions — wider regions mean more of
     the plan runs as generated JVM code."""
     return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))
+
+
+def lambda_bodies(df: DataFrame) -> list[str]:
+    """Text of every ``lambdafunction(...)`` in the optimized plan.
+    Higher-order-function lambdas run interpreted with no common-
+    subexpression elimination, so whatever a body computes is paid once
+    per array element."""
+    plan = optimized_plan(df)
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while i < len(plan) and depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end(): i - 1])
+    return out
+
+
+def lambda_splits(df: DataFrame) -> int:
+    """Lambda bodies that call ``split(``: each re-tokenizes its whole
+    input per array element instead of reading a bound token array."""
+    return sum("split(" in body for body in lambda_bodies(df))

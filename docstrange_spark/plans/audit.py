@@ -18,7 +18,9 @@ HEADER = """# PLANS — physical-plan audit of every contract query
 
 Generated by `python -m docstrange_spark.plans.audit` against {sf} on
 local[8]. Columns: shuffle exchanges, Python stages
-(mapInPandas/ArrowEval), whole-stage-codegen regions, oracle-checked.
+(mapInPandas/ArrowEval), whole-stage-codegen regions, lambda bodies in
+the optimized plan that call `split(` (each re-tokenizes its input once
+per array element; 0 everywhere is the goal), oracle-checked.
 Python stages appear exactly where a kernel is intended (spanize +
 extraction = 2; fused renditions add ZERO extra Python stages — they
 run inside the extraction kernel's worker); every relational operator
@@ -27,8 +29,8 @@ markdown inline; a production pipeline materializes it once (as
 bench.py does) and downstream plans shrink accordingly
 (`search_over_sections`: 1 exchange, no join).
 
-| query | shuffles | python stages | codegen regions | oracle |
-|---|---|---|---|---|
+| query | shuffles | python stages | codegen regions | lambda splits | oracle |
+|---|---|---|---|---|---|
 """
 
 NOTES = """
@@ -64,6 +66,13 @@ Notes:
   global-sort bottleneck at 100x. Catalyst folds the lit(0) key away,
   so `session.get_spark` demotes Spark's "No Partition Defined for
   Window" warning at the logger instead.
+- `bm25_search` / `passage_search` (1 hash exchange): no posting
+  table. One per-document projection binds the token array once and
+  emits the length plus one tf column per query term; a 1-row global
+  aggregate (N, total length, one df per term; a SinglePartition
+  exchange, not counted above) joins back as a broadcast, and the score
+  is computed in the same projection. The one hash exchange is the
+  sharded top-k's phase-1 shard window.
 - `dup_ngram_stats` / `dup_span_scrub` (exact-substring family): the
   duplicated-gram filter is a count window over the single gram-keyed
   exchange (round 6 — the earlier count-aggregate + marking join
@@ -101,6 +110,7 @@ def main() -> int:
                 plans.count_exchanges(df),
                 plans.count_python_stages(df),
                 plans.whole_stage_codegen_spans(df),
+                plans.lambda_splits(df),
                 "yes" if name in oracles else "rows-only",
             )
         )
@@ -112,13 +122,14 @@ def main() -> int:
             plans.count_exchanges(edf),
             plans.count_python_stages(edf),
             plans.whole_stage_codegen_spans(edf),
+            plans.lambda_splits(edf),
             "smoke",
         )
     )
     with open(args.out, "w") as f:
         f.write(HEADER.format(sf=args.sf_dir))
         for r in rows:
-            f.write("| {} | {} | {} | {} | {} |\n".format(*r))
+            f.write("| {} | {} | {} | {} | {} | {} |\n".format(*r))
         f.write(NOTES)
     print(f"wrote {args.out} ({len(rows)} plans)")
     spark.stop()

@@ -10,14 +10,27 @@ stdio transport (newline-delimited JSON-RPC 2.0).
 
 Corpus-native addressing: where the reference parses one LOCAL FILE
 per call, this server navigates documents of a corpus — ``parse_document``
-takes (corpus_path, doc_id), runs the engine's spanize → extract →
-sections pipeline for that document, and caches the result driver-side
-(the analog of the reference's in-memory ``DocumentCache``,
-server.py:47-60). Every subsequent tool answers from the cache plus
-the SAME engine kernels the oracle-checked contract queries run
-(navigation.sections_relational / search_relational /
-hierarchy_kernel / chunks_kernel), so serving answers and batch
-answers cannot diverge.
+takes (corpus_path, doc_id) and caches the document driver-side (the
+analog of the reference's in-memory ``DocumentCache``, server.py:47-60).
+
+Which tools run Spark:
+- Spark keeps corpus access. A document's first access reads the
+  corpus, spanizes it if it is documents-style, and extracts its
+  markdown: one narrowly filtered job chain per document.
+  ``search_corpus`` is Spark end to end (``retrieval.bm25_search``,
+  with ``retrieval.passage_corpus`` at passage granularity), the same
+  path as the CLI's ``--search``.
+- Every per-document tool answers from the cache, with no Spark job:
+  the pure kernels of ``kernels/sections.py`` give ``split_sections``
+  (run once at parse), ``search_document``, ``build_tree`` and
+  ``chunk_sections``. ``navigation.sections_relational`` and
+  ``search_relational`` follow the kernels' header and whitespace rules,
+  and the ``hierarchy_kernel``/``chunks_kernel`` mapInPandas wrappers
+  run the same kernels, so serving and batch answers agree; the tests
+  hold each tool to its batch operator field by field. Section
+  summaries strip only spaces, as ``section_summary_col`` (Spark
+  ``trim``) does, not all whitespace as the kernel's
+  ``section_summary`` does.
 
 Stdlib-only protocol implementation (no MCP SDK in this environment):
 ``initialize`` / ``tools/list`` / ``tools/call`` with the standard
@@ -38,6 +51,8 @@ from __future__ import annotations
 
 import json
 import sys
+
+from docstrange_spark.kernels import sections
 
 PROTOCOL_VERSION = "2024-11-05"
 SERVER_INFO = {"name": "docstrange_spark", "version": "1.0"}
@@ -147,7 +162,7 @@ class DocServer:
             return self._cache[key]
         from pyspark.sql import functions as F
 
-        from docstrange_spark.operators import extract, navigation, spanize
+        from docstrange_spark.operators import extract, spanize
 
         df = self.spark.read.parquet(corpus_path)
         if "spans" in df.columns:
@@ -165,12 +180,9 @@ class DocServer:
         if not rows:
             raise KeyError(f"document {doc_id!r} not found in {corpus_path}")
         markdown = rows[0]["markdown"]
-        md_df = self._md_df(rows[0]["doc_id"], markdown)
         secs = [
-            r.asDict()
-            for r in navigation.sections_relational(md_df)
-            .orderBy("section_idx")
-            .collect()
+            {"doc_id": rows[0]["doc_id"], "section_idx": i, **sec}
+            for i, sec in enumerate(sections.split_sections(markdown))
         ]
         total = sum(s["token_count"] for s in secs)
         entry = {
@@ -182,18 +194,9 @@ class DocServer:
         self._cache[key] = entry
         return entry
 
-    def _md_df(self, doc_id: str, markdown: str):
-        return self.spark.createDataFrame(
-            [(doc_id, markdown)], "doc_id string, markdown string"
-        )
-
     # -- tools --------------------------------------------------------------
 
     def call(self, name: str, args: dict):
-        from pyspark.sql import functions as F
-
-        from docstrange_spark.operators import navigation
-
         if name == "list_cached_documents":
             return {"cached_documents": sorted(self._cache),
                     "count": len(self._cache)}
@@ -223,7 +226,6 @@ class DocServer:
                         for r in hits
                     ]}
         doc = self._load(args["corpus_path"], str(args["doc_id"]))
-        md_df = self._md_df(doc["doc_id"], doc["markdown"])
         if name == "parse_document":
             info = self._info(doc)
             return {"status": "parsed", **info}
@@ -236,12 +238,15 @@ class DocServer:
                 if s["title"] is not None and 1 <= s["level"] <= max_level
             ]}
         if name == "search_document":
-            hits = navigation.search_relational(
-                md_df, args["query"],
-                case_sensitive=bool(args.get("case_sensitive", False)),
-            ).orderBy("line_number").collect()
+            hits = [
+                {"doc_id": doc["doc_id"], **h}
+                for h in sections.search_document(
+                    doc["markdown"], doc["sections"], args["query"],
+                    case_sensitive=bool(args.get("case_sensitive", False)),
+                )
+            ]
             return {"query": args["query"], "n_results": len(hits),
-                    "results": [r.asDict() for r in hits]}
+                    "results": hits}
         if name == "get_section":
             want = args["section_title"].strip().lower()
             for s in doc["sections"]:
@@ -253,32 +258,34 @@ class DocServer:
                     "available_sections": [s["title"] for s in doc["sections"]]}
         if name == "get_section_summaries":
             max_length = int(args.get("max_length", 200))
-            rows = (
-                navigation.sections_relational(md_df)
-                .orderBy("section_idx")
-                .select(
-                    "section_idx", "title", "level",
-                    navigation.section_summary_col(
-                        "content", max_length
-                    ).alias("summary"),
-                )
-                .collect()
-            )
-            return {"summaries": [r.asDict() for r in rows]}
+            summaries = []
+            for s in doc["sections"]:
+                # strip(" ") is Spark's trim in navigation.section_summary_col
+                c = s["content"].strip(" ")
+                summaries.append({
+                    "section_idx": s["section_idx"], "title": s["title"],
+                    "level": s["level"],
+                    "summary": c if len(c) <= max_length
+                    else c[:max(max_length, 0)] + "...",
+                })
+            return {"summaries": summaries}
         if name == "get_full_content":
             return {"doc_id": doc["doc_id"], "markdown": doc["markdown"]}
         if name == "get_document_info":
             return self._info(doc)
         if name == "get_hierarchical_structure":
-            row = navigation.hierarchy_kernel(md_df).collect()[0]
-            return json.loads(row["hierarchy"])
+            # round-trip for the key order of the batch hierarchy column
+            # (navigation.hierarchy_kernel), so both serialize alike
+            return json.loads(json.dumps(
+                sections.build_tree(doc["sections"]), sort_keys=True))
         if name in ("get_section_chunks", "get_chunk_content"):
             max_tokens = int(args.get("max_tokens", 4000))
             chunks = [
-                r.asDict()
-                for r in navigation.chunks_kernel(md_df, max_tokens=max_tokens)
-                .orderBy("chunk_idx")
-                .collect()
+                {"chunk_idx": i, "start_index": c["start_index"],
+                 "end_index": c["end_index"], "token_count": c["token_count"],
+                 "titles": [t["title"] for t in c["sections"]]}
+                for i, c in enumerate(
+                    sections.chunk_sections(doc["sections"], max_tokens))
             ]
             if name == "get_section_chunks":
                 return {"max_tokens": max_tokens, "n_chunks": len(chunks),

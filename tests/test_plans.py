@@ -5,7 +5,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from docstrange_spark import datagen, plans
-from docstrange_spark.operators import dedup, extract, navigation, similarity
+from docstrange_spark.operators import (
+    dedup,
+    extract,
+    navigation,
+    retrieval,
+    similarity,
+    text_analysis,
+)
 
 
 @pytest.fixture(scope="module")
@@ -225,3 +232,34 @@ def test_calibration_bins_single_agg_exchange(docs):
     # the binning itself adds ONE hash-agg exchange on top of the
     # scoring projection (training aggregates run driver-side earlier)
     assert plans.count_python_stages(df) == 0
+
+
+# jaccard_pairs is absent: it builds its sets from dedup.shingles and
+# checkpoints them eagerly, so the plan it returns holds no lambda
+SPLIT_IN_LAMBDA_CASES = {
+    "shingles": lambda d: dedup.shingles(d),
+    "minhash_signatures": lambda d: dedup.minhash_signatures(d),
+    "ngram_counts": lambda d: text_analysis.ngram_counts(d, n=3),
+    "phrase_search": lambda d: retrieval.phrase_search(d, "spark window"),
+    "proximity_search": lambda d: retrieval.proximity_search(
+        d, "spark", "window"),
+    "line_filters": lambda d: text_analysis.line_filters(d),
+    "line_filter_text_expr": lambda d: d.select(
+        text_analysis.line_filter_text_expr("text")),
+    "bm25_search": lambda d: retrieval.bm25_search(
+        d, ["spark", "window", "table"]),
+}
+
+
+@pytest.mark.parametrize("name", list(SPLIT_IN_LAMBDA_CASES))
+def test_no_split_inside_lambda(docs, name):
+    """Higher-order-function lambdas run interpreted with no common-
+    subexpression elimination: a ``split(`` inside a lambda body
+    re-tokenizes the whole text once per array element (quadratic in
+    document length). Token arrays are bound once per row instead, as a
+    projected column or through ``text_analysis.bind``."""
+    df = SPLIT_IN_LAMBDA_CASES[name](docs)
+    assert plans.lambda_bodies(df), "case no longer exercises a lambda"
+    assert plans.lambda_splits(df) == 0, [
+        b for b in plans.lambda_bodies(df) if "split(" in b
+    ]

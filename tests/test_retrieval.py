@@ -60,6 +60,78 @@ def test_bm25_higher_tf_scores_higher(spark):
     assert out[0]["rank"] == 1
 
 
+def _bm25_reference(rows, terms, k1=1.2, b=0.75):
+    """Pure-Python BM25 with the engine's arithmetic: per-term
+    contributions rounded half-up to integer micro-units, summed
+    exactly, the sum rounded half-up to 6 places. Returns
+    [(doc_id, score)] ranked by score desc, doc_id asc."""
+    import math
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def half_up(x, places):
+        q = Decimal(1).scaleb(-places)
+        return float(Decimal(repr(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+    toks = {d: [w for w in (t or "").lower().split(" ") if w] for d, t in rows}
+    terms = sorted({t.lower() for t in terms})
+    n = len(toks)
+    avgdl = sum(len(ts) for ts in toks.values()) / n
+    dfs = {t: sum(t in ts for ts in toks.values()) for t in terms}
+    out = []
+    for d, ts in toks.items():
+        micro = 0
+        for t in terms:
+            tf = ts.count(t)
+            if tf:
+                idf = math.log((n - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0)
+                sat = (tf * (k1 + 1.0)) / (
+                    tf + k1 * ((1.0 - b) + b * (len(ts) / avgdl))
+                )
+                micro += int(half_up(idf * sat * 1_000_000.0, 0))
+        if any(t in ts for t in terms):
+            out.append((d, half_up(micro / 1_000_000.0, 6)))
+    return sorted(out, key=lambda r: (-r[1], r[0]))
+
+
+@pytest.mark.parametrize("n_shards", [1, 32])
+def test_bm25_matches_python_reference(spark, n_shards):
+    """The one-scan bm25_search against a pure-Python BM25 on a seeded
+    corpus with empty and NULL texts (both count in N), a query term
+    the corpus lacks, a repeated mixed-case query term, docs holding
+    only one of the two terms, and score ties (duplicate texts) that
+    break by doc_id."""
+    import random
+
+    rng = random.Random(11)
+    vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 30))))
+        for i in range(200)
+    ]
+    rows += [
+        (200, ""), (201, None), (202, "ALPHA  alpha gamma "),
+        (203, "beta only here"), (204, "alpha only here"),
+        (205, "alpha only here"), (206, "beta only here"),
+    ]
+    rows += [(300 + i, rows[i][1]) for i in range(0, 40, 3)]  # ties
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    terms = ["Alpha", "alpha", "BETA", "absentterm"]
+    want = _bm25_reference(rows, terms)
+    scores = [s for _, s in want]
+    assert len(set(scores)) < len(scores)  # the corpus plants ties
+    assert {203, 204, 205, 206} <= {d for d, _ in want}
+    got = retrieval.bm25_search(
+        df, terms, top_k=len(rows), n_shards=n_shards
+    ).orderBy("rank").collect()
+    assert [(r["doc_id"], r["score"]) for r in got] == want
+    assert [r["rank"] for r in got] == list(range(1, len(want) + 1))
+    # a cut between two tied docs keeps the smaller doc_id
+    k = next(i for i in range(1, len(want)) if want[i - 1][1] == want[i][1])
+    top = retrieval.bm25_search(df, terms, top_k=k, n_shards=n_shards)
+    assert [(r["doc_id"], r["score"]) for r in top.orderBy("rank").collect()
+            ] == want[:k]
+
+
 def test_corpus_diff_statuses(spark):
     old = spark.createDataFrame(
         [(0, "same"), (1, "before"), (2, "gone")], "doc_id long, text string"

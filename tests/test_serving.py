@@ -10,10 +10,33 @@ from docstrange_spark import datagen
 from docstrange_spark.serving import TOOLS, DocServer
 
 
+# Text spans pass through extraction verbatim, so these documents put
+# header and whitespace edge cases into the extracted markdown: a title
+# ending in a tab, headers whose "#" is followed by non-ASCII whitespace,
+# a carriage return inside a title, an all-whitespace title, and
+# sections whose content starts or ends with spaces and tabs.
+EDGE_DOCS = {
+    "edge_tab_title": ["  lead line\t", "# Tab title\t", "body one  ",
+                       "## Second\x0b", "\tbody two"],
+    "edge_unicode_ws": ["#\xa0Nbsp title", "x\u3000", "#\u3000Wide\u2003",
+                        "# A\rB", "#  \t", "  tail  "],
+    "edge_no_header": ["  only text\t", "#NoSpace", "####### seven"],
+}
+
+
 @pytest.fixture(scope="module")
 def corpus(spark, tmp_path_factory):
+    import pandas as pd
+
     p = str(tmp_path_factory.mktemp("serve") / "spans")
-    datagen.fixture_spans(spark).write.parquet(p)
+    rows = datagen.fixture_docs() + [
+        (doc_id, [datagen.sp("text", t, offset=i) for i, t in enumerate(lines)])
+        for doc_id, lines in EDGE_DOCS.items()
+    ]
+    spark.createDataFrame(
+        pd.DataFrame(rows, columns=["doc_id", "spans"]),
+        schema=datagen.SPAN_SCHEMA_DDL,
+    ).write.parquet(p)
     return p
 
 
@@ -87,22 +110,100 @@ def test_parse_and_navigate(server, corpus):
     assert cached["count"] == 1 and corpus in cached["cached_documents"][0]
 
 
+# md_structure: header on line 0; classify_edge: lines before the first
+# header; no_headers: one "Document Content" section; empty_doc: "";
+# search_nav: a long multi-section document; edge_*: EDGE_DOCS
+PARITY_DOCS = ["md_structure-00000000", "classify_edge-00000000",
+               "no_headers-00000000", "empty_doc-00000000",
+               "search_nav-00000000", *EDGE_DOCS]
+
+
 def test_search_matches_contract_kernel(server, corpus, spark):
+    """The kernels the server answers from agree, field by field, with
+    the Spark contract path on the same extracted markdown: cached
+    sections against sections_relational, search_document hits against
+    search_relational, summaries against section_summary_col, and the
+    hierarchy and chunk tools against the mapInPandas kernels."""
     from docstrange_spark.operators import extract, navigation
 
-    got = _call(server, "search_document",
-                {"corpus_path": corpus, "doc_id": DOC, "query": "the"})
-    md = (
-        extract.extract(
-            spark.read.parquet(corpus).where(f"doc_id = '{DOC}'"),
+    for doc_id in PARITY_DOCS:
+        md = extract.extract(
+            spark.read.parquet(corpus).where(f"doc_id = '{doc_id}'"),
             include_spans=False,
         ).select("doc_id", "markdown")
-    )
-    want = navigation.search_relational(md, "the").orderBy("line_number").collect()
-    assert got["n_results"] == len(want)
-    assert [r["line_number"] for r in got["results"]] == [
-        r["line_number"] for r in want
-    ]
+        secs = navigation.sections_relational(md).orderBy("section_idx")
+        want = [r.asDict() for r in secs.collect()]
+        assert server._load(corpus, doc_id)["sections"] == want, doc_id
+        for max_length in (12, -1):
+            got = _call(server, "get_section_summaries",
+                        {"corpus_path": corpus, "doc_id": doc_id,
+                         "max_length": max_length})
+            assert got["summaries"] == [r.asDict() for r in secs.select(
+                "section_idx", "title", "level",
+                navigation.section_summary_col("content", max_length)
+                .alias("summary"),
+            ).collect()], (doc_id, max_length)
+        for query, cs in (("the", False), ("E", False), ("E", True),
+                          ("-", False), ("no such text", False),
+                          ("", False), ("\t", False)):
+            got = _call(server, "search_document",
+                        {"corpus_path": corpus, "doc_id": doc_id,
+                         "query": query, "case_sensitive": cs})
+            want = [r.asDict() for r in
+                    navigation.search_relational(md, query, case_sensitive=cs)
+                    .orderBy("line_number").collect()]
+            assert got["n_results"] == len(want), (doc_id, query, cs)
+            assert got["results"] == want, (doc_id, query, cs)
+        # hierarchy and chunks: same text as the batch mapInPandas kernels
+        args = {"corpus_path": corpus, "doc_id": doc_id}
+        resp = server.handle({"jsonrpc": "2.0", "id": 1, "method": "tools/call",
+                              "params": {"name": "get_hierarchical_structure",
+                                         "arguments": args}})
+        tree = navigation.hierarchy_kernel(md).collect()[0]["hierarchy"]
+        assert resp["result"]["content"][0]["text"] == json.dumps(
+            json.loads(tree), indent=2)
+        got = _call(server, "get_section_chunks", {**args, "max_tokens": 20})
+        assert got["chunks"] == [
+            {k: r[k] for k in ("chunk_idx", "token_count", "titles")}
+            for r in navigation.chunks_kernel(md, max_tokens=20)
+            .orderBy("chunk_idx").collect()
+        ], doc_id
+
+    # what both paths return on the inputs where Spark's ASCII-only trim
+    # and \s once disagreed with the kernels' Python str.strip and re
+    def titles(doc_id):
+        return [(h["title"], h["level"]) for h in _call(
+            server, "get_section_summaries",
+            {"corpus_path": corpus, "doc_id": doc_id})["summaries"]]
+
+    assert titles("edge_tab_title") == [("Tab title", 1), ("Second", 2)]
+    assert titles("edge_unicode_ws") == [
+        ("Nbsp title", 1), ("Wide", 1), ("A\rB", 1), ("", 1)]
+    assert titles("edge_no_header") == [("Document Content", 0)]
+    # an empty query on an empty document hits its one empty line, which
+    # belongs to no section
+    got = _call(server, "search_document",
+                {"corpus_path": corpus, "doc_id": "empty_doc-00000000",
+                 "query": ""})
+    assert got["results"] == [
+        {"doc_id": "empty_doc-00000000", "line_number": 1, "line_content": "",
+         "section": "Unknown Section", "context": ""}]
+
+
+def test_header_whitespace_class_is_python_isspace(spark):
+    """navigation's Java whitespace class holds exactly the characters
+    Python's re \\s and str.strip() treat as whitespace."""
+    from pyspark.sql import functions as F
+
+    from docstrange_spark.operators import navigation
+
+    top = 0x3100  # above the largest whitespace code point, U+3000
+    got = {
+        r["c"] for r in spark.createDataFrame(
+            [(chr(i),) for i in range(1, top)], "c string")
+        .where(F.col("c").rlike(f"^{navigation._WS}$")).collect()
+    }
+    assert got == {chr(i) for i in range(top) if chr(i).isspace()}
 
 
 def test_chunks_roundtrip(server, corpus):
