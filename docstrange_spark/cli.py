@@ -61,9 +61,9 @@ def _llm_json_payloads(out, args):
 
     ``out`` already carries the fused ``json`` rendition (the fields/
     schema paths force ``formats=("json",)``), which is byte-identical
-    to what a fresh md_to_json pass would produce — reusing it avoids a
-    second chained Python-UDF stage (which doubles Python workers per
-    task; see extract.py's fused-renditions note)."""
+    to what a separate JSON rendition pass would produce — reusing it
+    avoids a second chained Python-UDF stage (which doubles Python
+    workers per task; see extract.py's fused-renditions note)."""
     from pyspark.sql import functions as F
 
     from docstrange_spark.operators import llm

@@ -120,17 +120,3 @@ def clean_content(text: str, header_prefixes: tuple[str, ...] = ("# ", "## ")) -
     for prefix in header_prefixes:
         out = out.replace(prefix, "\n" + prefix)
     return out.strip()
-
-
-def clean_content_series(texts: pd.Series) -> pd.Series:
-    """Vectorized ``clean_content`` over a Series (default prefixes)."""
-    s = texts.fillna("")
-    # collapse whitespace within lines, drop blank lines
-    s = s.str.split("\n").map(
-        lambda lines: "\n".join(
-            cl for line in lines for cl in [" ".join(line.split())] if cl
-        )
-    )
-    s = s.str.replace("# ", "\n# ", regex=False)
-    s = s.str.replace("## ", "\n## ", regex=False)
-    return s.str.strip()

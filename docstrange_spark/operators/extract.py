@@ -1,25 +1,22 @@
 """The extraction pipeline: span table -> markdown + block stream
 (+ optionally fused renditions).
 
-Scale design (the north rule's partitioning/shuffle/skew clause):
+One plan, three scale mechanisms (the north rule's
+partitioning/shuffle/skew clause):
 
 - **salted repartition by xxhash64(doc_id)**: documents spread uniformly
   regardless of doc_id distribution, defusing producer skew (e.g. one
   crawl batch's docs landing in one input file);
 - **span-budget batch slicing** (in-kernel): each Arrow batch is split so
-  no kernel invocation holds more than ``MAX_BATCH_SPANS`` spans — a
-  mega-document (100× median span count) costs one small sub-batch, not
-  an OOM, at any ``maxRecordsPerBatch`` setting;
-- **optional two-tier mega routing** (``mega_threshold``): documents with
-  ``size(spans) >= threshold`` shuffle into their own partition set so a
-  straggler mega-doc occupies one task. Off by default — it costs a
-  second scan+shuffle, which only pays off when mega docs are both huge
-  (>10^5 spans) and frequent; the salted spread plus batch slicing
-  handles the common case in one exchange;
+  no kernel invocation holds more than ``MAX_BATCH_SPANS`` spans, and a
+  single document over the budget is assembled in order-preserving
+  segments — a mega-document costs a sequence of bounded invocations,
+  not an OOM, at any ``maxRecordsPerBatch`` setting;
 - **fused renditions**: ``formats=("json", ...)`` computes renditions
-  inside the same Python worker as assembly. Chaining a separate pandas
-  UDF would double the Python processes per task (mapInPandas worker +
-  UDF worker), oversubscribing CPUs at high parallelism — measured 2×
+  inside the same Python worker as assembly; this kernel is the only
+  producer of the rendition columns. Chaining a separate pandas UDF
+  would double the Python processes per task (mapInPandas worker + UDF
+  worker), oversubscribing CPUs at high parallelism — measured 2×
   slower at local[32] — and ships the markdown through Arrow twice.
 
 The kernel is ``mapInPandas`` over Arrow batches — no per-row Python.
@@ -56,7 +53,7 @@ BASE_SCHEMA = (
 )
 
 # the doc_meta field spec — single source of truth for the fused-kernel
-# DDL, the kernel's dict extraction, and renditions.META_SCHEMA
+# DDL and the kernel's dict extraction
 META_FIELDS: tuple[tuple[str, str, object], ...] = (
     ("total_sections", "int", 0),
     ("max_heading_level", "int", 0),
@@ -293,10 +290,6 @@ def _make_kernel(formats: tuple[str, ...] = (), include_spans: bool = True):
     return kernel
 
 
-# default kernel (no fused renditions) — used by the streaming module too
-_extract_kernel = _make_kernel()
-
-
 NOSPANS_SCHEMA = (
     "doc_id string, markdown string, n_blocks int, profile string"
 )
@@ -311,8 +304,6 @@ def _schema_for(formats: tuple[str, ...], include_spans: bool = True) -> str:
 
 def extract(
     df: DataFrame,
-    parallelism: int | None = None,
-    mega_threshold: int | None = None,
     salt: bool = True,
     formats: tuple[str, ...] = (),
     include_spans: bool = True,
@@ -321,7 +312,8 @@ def extract(
     ``(doc_id string, spans array<struct<...>>)``.
 
     Returns ``(doc_id, markdown, out_spans, n_blocks, profile[,
-    renditions...])``.
+    renditions...])``. ``salt=False`` skips the xxhash64 repartition
+    (the streaming caller, whose micro-batches are file-bounded).
 
     Measured cost structure at sf0.1/local[32] (medians): scan ~0.5s,
     +salt shuffle ~0.3s, a NO-OP pandas stage over the same input
@@ -331,31 +323,10 @@ def extract(
     dict materialization measured no better (2.0s for the no-op) on
     this host, so the pandas interface stays.
     """
-    spark = df.sparkSession
-    n_part = parallelism or int(spark.conf.get("spark.sql.shuffle.partitions"))
     kernel = _make_kernel(formats, include_spans)
     schema = _schema_for(formats, include_spans)
     base = df.select("doc_id", "spans")
-
-    if not salt:
-        return base.mapInPandas(kernel, schema=schema)
-
-    if mega_threshold is None:
-        return base.repartition(n_part, F.xxhash64("doc_id")).mapInPandas(
-            kernel, schema=schema
-        )
-
-    sized = base.select("doc_id", "spans", F.size("spans").alias("_n_spans"))
-    small = (
-        sized.where(F.col("_n_spans") < mega_threshold)
-        .repartition(n_part, F.xxhash64("doc_id"))
-        .drop("_n_spans")
-    )
-    big = (
-        sized.where(F.col("_n_spans") >= mega_threshold)
-        .repartition(n_part, F.xxhash64("doc_id"))
-        .drop("_n_spans")
-    )
-    return small.mapInPandas(kernel, schema=schema).unionByName(
-        big.mapInPandas(kernel, schema=schema)
-    )
+    if salt:
+        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        base = base.repartition(n_part, F.xxhash64("doc_id"))
+    return base.mapInPandas(kernel, schema=schema)

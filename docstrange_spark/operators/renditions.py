@@ -1,9 +1,9 @@
-"""Rendition operators R1-R5: markdown -> {markdown, text, html, json, csv}.
+"""Multi-document combination: the CLI's ``--combine`` output.
 
-Pure string->string functions, so they are scalar pandas UDFs (Arrow
-batch transfer, regexes compiled once per executor at module import —
-the Spark analog of the reference precompiling patterns in ``__init__``,
-``/root/reference/docstrange/result.py:19-29,362-371``).
+Per-document renditions (json/html/csv/html_gpu/json_cloud/doc_meta) are
+produced only by the fused extraction kernel (``extract._make_kernel``);
+this module joins those columns across documents the way the reference
+CLI does for multi-file input.
 """
 
 from __future__ import annotations
@@ -14,75 +14,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from docstrange_spark.kernels import mdcsv, mdhtml, mdjson
-
-# DataType instances (not DDL strings) so the UDFs are definable at module
-# import, before any SparkSession exists on the worker driver
-
-
-@pandas_udf(StringType())
-def md_to_html_body(md: pd.Series) -> pd.Series:
-    return md.fillna("").map(mdhtml.markdown_to_html_body)
-
-
-@pandas_udf(StringType())
-def md_to_html_page(md: pd.Series) -> pd.Series:
-    return md.fillna("").map(mdhtml.markdown_to_html_page)
-
-
-@pandas_udf(StringType())
-def md_to_json(md: pd.Series) -> pd.Series:
-    return md.fillna("").map(
-        lambda m: json.dumps(mdjson.extract_data(m), ensure_ascii=False, sort_keys=True)
-    )
-
-
-@pandas_udf(StringType())
-def md_to_csv(md: pd.Series) -> pd.Series:
-    return md.fillna("").map(mdcsv.markdown_to_csv)
-
-
-# structured (typed) metadata — lets downstream queries stay relational.
-# Field spec shared with the fused extraction kernel (extract.META_FIELDS)
-# so the three shapes (DDL, UDF schema, extraction defaults) cannot drift.
-from docstrange_spark.operators.extract import META_FIELDS  # noqa: E402
-
-_META_TYPES = {"int": IntegerType(), "boolean": BooleanType()}
-META_SCHEMA = StructType(
-    [StructField(n, _META_TYPES[t]) for n, t, _ in META_FIELDS]
-)
-
-
-@pandas_udf(META_SCHEMA)
-def md_doc_metadata(md: pd.Series) -> pd.DataFrame:
-    rows = []
-    for m in md.fillna(""):
-        meta = mdjson.parse_markdown(m)["document"]["metadata"]
-        rows.append({k: meta.get(k, dflt) for k, _, dflt in META_FIELDS})
-    return pd.DataFrame(rows, columns=[n for n, _, _ in META_FIELDS])
-
-
-def with_renditions(extracted: DataFrame, formats: tuple[str, ...] = ("html", "json", "csv")) -> DataFrame:
-    """Attach rendition columns to an extracted DataFrame. ``markdown``
-    and ``text`` are identity renditions (reference R1/R2)."""
-    out = extracted
-    if "html" in formats:
-        out = out.withColumn("html", md_to_html_page(F.col("markdown")))
-    if "json" in formats:
-        out = out.withColumn("json", md_to_json(F.col("markdown")))
-    if "csv" in formats:
-        out = out.withColumn("csv", md_to_csv(F.col("markdown")))
-    if "meta" in formats:
-        out = out.withColumn("doc_meta", md_doc_metadata(F.col("markdown")))
-    return out
+from pyspark.sql.types import StringType
 
 
 @pandas_udf(StringType())

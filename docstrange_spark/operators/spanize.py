@@ -92,22 +92,6 @@ def spanize_tabular(doc_id: str, text: str) -> list[dict]:
     return spans
 
 
-def _tabular_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "csv_sheet-" + pdf["doc_id"].astype(str)
-        spans = [
-            spanize_tabular(d, t) for d, t in zip(ids, pdf["text"].fillna(""))
-        ]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize_tables(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('csv_sheet-{id}', table spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _tabular_kernel, schema=SPAN_SCHEMA_DDL
-    )
-
-
 def spanize_list(doc_id: str, text: str) -> list[dict]:
     """List bridge: first 4 tokens as a nested unordered pair + an
     ordered pair — exercises list rendering (ul/ol markers, indent)
@@ -124,19 +108,6 @@ def spanize_list(doc_id: str, text: str) -> list[dict]:
         {"kind": "list_item", "text": tok(2), "media_ref": "ol:0:1", "offset": 3},
         {"kind": "list_item", "text": tok(3), "media_ref": "ol:0:2", "offset": 4},
     ]
-
-
-def _list_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "no_headers-" + pdf["doc_id"].astype(str)
-        spans = [spanize_list(d, t) for d, t in zip(ids, pdf["text"].fillna(""))]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize_lists(documents: DataFrame) -> DataFrame:
-    return documents.select("doc_id", "text").mapInPandas(
-        _list_kernel, schema=SPAN_SCHEMA_DDL
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -200,23 +171,6 @@ def spanize_markup_page(doc_id: str, num_id: int, text: str) -> list[dict]:
     return spans
 
 
-def _markup_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "html_page-" + pdf["doc_id"].astype(str)
-        spans = [
-            spanize_markup_page(d, int(n), t)
-            for d, n, t in zip(ids, pdf["doc_id"], pdf["text"].fillna(""))
-        ]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize_markup(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('html_page-{id}', full-page DOM spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _markup_kernel, schema=SPAN_SCHEMA_DDL
-    )
-
-
 def _nine_tokens(text: str, pad: str = "t") -> list[str]:
     toks = (text or "").split(" ")
     return [
@@ -256,33 +210,6 @@ def spanize_layout_page(doc_id: str, text: str, noisy: bool = False) -> list[dic
     ]
 
 
-def _layout_kernel_factory(prefix: str, noisy: bool):
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = f"{prefix}-" + pdf["doc_id"].astype(str)
-            spans = [
-                spanize_layout_page(d, t, noisy)
-                for d, t in zip(ids, pdf["text"].fillna(""))
-            ]
-            yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-    return _run
-
-
-def spanize_layout(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('pdf_pages-{id}', layout spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _layout_kernel_factory("pdf_pages", noisy=False), schema=SPAN_SCHEMA_DDL
-    )
-
-
-def spanize_ocr(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('ocr_noisy-{id}', noisy layout spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _layout_kernel_factory("ocr_noisy", noisy=True), schema=SPAN_SCHEMA_DDL
-    )
-
-
 DOCX_ROWS = 25
 DOCX_COLS = 2
 
@@ -311,22 +238,6 @@ def spanize_docx_table(doc_id: str, text: str) -> list[dict]:
     return spans
 
 
-def _docx_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "docx_like-" + pdf["doc_id"].astype(str)
-        spans = [
-            spanize_docx_table(d, t) for d, t in zip(ids, pdf["text"].fillna(""))
-        ]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize_docx(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('docx_like-{id}', capped-table spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _docx_kernel, schema=SPAN_SCHEMA_DDL
-    )
-
-
 def spanize_pptx_deck(doc_id: str, text: str) -> list[dict]:
     """PPTX bridge (S11): a two-slide deck mirroring the reference's
     slide sectioning (pptx_processor.py:107-119 — ``## Slide {n}``
@@ -350,39 +261,6 @@ def spanize_pptx_deck(doc_id: str, text: str) -> list[dict]:
         t("list_item", w[7], "ul:0", 6),
         t("list_item", w[8], "ul:0", 7),
     ]
-
-
-def _pptx_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "pptx_like-" + pdf["doc_id"].astype(str)
-        spans = [
-            spanize_pptx_deck(d, t) for d, t in zip(ids, pdf["text"].fillna(""))
-        ]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize_pptx(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text, ...) -> ('pptx_like-{id}', slide-deck spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _pptx_kernel, schema=SPAN_SCHEMA_DDL
-    )
-
-
-def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "doc-" + pdf["doc_id"].astype(str)
-        spans = [
-            spanize_text(d, t)
-            for d, t in zip(ids, pdf["text"].fillna(""))
-        ]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
-
-
-def spanize(documents: DataFrame) -> DataFrame:
-    """(doc_id int64, text string, ...) -> (doc_id 'doc-{id}', spans)."""
-    return documents.select("doc_id", "text").mapInPandas(
-        _kernel, schema=SPAN_SCHEMA_DDL
-    )
 
 
 def spanize_media(doc_id: str, text: str) -> list[dict]:
@@ -412,14 +290,72 @@ def spanize_media(doc_id: str, text: str) -> list[dict]:
     ]
 
 
-def _media_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = "media_page-" + pdf["doc_id"].astype(str)
-        spans = [spanize_media(d, t) for d, t in zip(ids, pdf["text"].fillna(""))]
-        yield pd.DataFrame({"doc_id": ids, "spans": spans})
+# ---------------------------------------------------------------------------
+# Spark bridges: every public ``spanize*`` runs the same Arrow-batch kernel,
+# differing only in the doc_id prefix and the page function. A page is
+# called as ``page(prefixed_id, numeric_id, text)`` with NULL text read as
+# "" (only the markup page uses the numeric id).
+
+
+def _bridge(documents: DataFrame, prefix: str, page) -> DataFrame:
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = f"{prefix}-" + pdf["doc_id"].astype(str)
+            spans = [
+                page(d, n, t)
+                for d, n, t in zip(ids, pdf["doc_id"], pdf["text"].fillna(""))
+            ]
+            yield pd.DataFrame({"doc_id": ids, "spans": spans})
+
+    return documents.select("doc_id", "text").mapInPandas(
+        kernel, schema=SPAN_SCHEMA_DDL
+    )
+
+
+def spanize(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text string, ...) -> (doc_id 'doc-{id}', spans)."""
+    return _bridge(documents, "doc", lambda d, _, t: spanize_text(d, t))
+
+
+def spanize_tables(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('csv_sheet-{id}', table spans)."""
+    return _bridge(documents, "csv_sheet", lambda d, _, t: spanize_tabular(d, t))
+
+
+def spanize_lists(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('no_headers-{id}', list spans)."""
+    return _bridge(documents, "no_headers", lambda d, _, t: spanize_list(d, t))
+
+
+def spanize_markup(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('html_page-{id}', full-page DOM spans)."""
+    return _bridge(
+        documents, "html_page", lambda d, n, t: spanize_markup_page(d, int(n), t)
+    )
+
+
+def spanize_layout(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('pdf_pages-{id}', layout spans)."""
+    return _bridge(documents, "pdf_pages", lambda d, _, t: spanize_layout_page(d, t))
+
+
+def spanize_ocr(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('ocr_noisy-{id}', noisy layout spans)."""
+    return _bridge(
+        documents, "ocr_noisy", lambda d, _, t: spanize_layout_page(d, t, noisy=True)
+    )
+
+
+def spanize_docx(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('docx_like-{id}', capped-table spans)."""
+    return _bridge(documents, "docx_like", lambda d, _, t: spanize_docx_table(d, t))
+
+
+def spanize_pptx(documents: DataFrame) -> DataFrame:
+    """(doc_id int64, text, ...) -> ('pptx_like-{id}', slide-deck spans)."""
+    return _bridge(documents, "pptx_like", lambda d, _, t: spanize_pptx_deck(d, t))
 
 
 def spanize_media_docs(documents: DataFrame) -> DataFrame:
-    return documents.select("doc_id", "text").mapInPandas(
-        _media_kernel, schema=SPAN_SCHEMA_DDL
-    )
+    """(doc_id int64, text, ...) -> ('media_page-{id}', interleaved media spans)."""
+    return _bridge(documents, "media_page", lambda d, _, t: spanize_media(d, t))

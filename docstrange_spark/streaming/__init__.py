@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from docstrange_spark.datagen import SPAN_SCHEMA_DDL
-from docstrange_spark.operators.extract import BASE_SCHEMA, _extract_kernel
+from docstrange_spark.operators import extract
 
 
 def read_span_stream(spark: SparkSession, path: str, max_files: int = 8) -> DataFrame:
@@ -26,11 +26,10 @@ def read_span_stream(spark: SparkSession, path: str, max_files: int = 8) -> Data
 
 
 def extract_stream(stream_df: DataFrame) -> DataFrame:
-    """Streaming extraction: same kernel, streaming plan. Salting is a
-    no-op in micro-batch mode (each batch is already file-bounded)."""
-    return stream_df.select("doc_id", "spans").mapInPandas(
-        _extract_kernel, schema=BASE_SCHEMA
-    )
+    """Streaming extraction: the batch ``extract`` plan without the salt
+    repartition — micro-batches are never salted (each batch is already
+    file-bounded)."""
+    return extract.extract(stream_df, salt=False)
 
 
 def sessionize_events(

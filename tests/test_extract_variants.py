@@ -1,27 +1,32 @@
 """Extraction variants must be semantically identical: fused renditions ==
-standalone UDFs; span-budget slicing and mega routing invisible."""
+the pure rendition kernels; span-budget slicing invisible."""
+
+import json
 
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
 from docstrange_spark import datagen
-from docstrange_spark.operators import extract, renditions
+from docstrange_spark.kernels import mdcsv, mdhtml, mdjson
+from docstrange_spark.operators import extract
 
 
-def test_fused_renditions_equal_udfs(spark):
-    spans = datagen.fixture_spans(spark)
-    fused = {
-        r["doc_id"]: (r["json"], r["html"], r["csv"])
-        for r in extract.extract(spans, formats=("json", "html", "csv")).collect()
-    }
-    udf = {
-        r["doc_id"]: (r["json"], r["html"], r["csv"])
-        for r in renditions.with_renditions(
-            extract.extract(spans), formats=("json", "html", "csv")
-        ).collect()
-    }
-    assert fused == udf
+def test_fused_renditions_equal_kernels(spark):
+    """The fused rendition columns equal the pure kernels run in the
+    local process on the same collected markdown (mega-document included)."""
+    spans = datagen.fixture_spans(spark, include_mega=True)
+    rows = extract.extract(spans, formats=("json", "html", "csv", "meta")).collect()
+    assert "mega_doc-00000000" in {r["doc_id"] for r in rows}
+    for r in rows:
+        md = r["markdown"]
+        meta = mdjson.parse_markdown(md)["document"]["metadata"]
+        assert r["json"] == json.dumps(
+            mdjson.extract_data(md), ensure_ascii=False, sort_keys=True
+        ), r["doc_id"]
+        assert r["html"] == mdhtml.markdown_to_html_page(md), r["doc_id"]
+        assert r["csv"] == mdcsv.markdown_to_csv(md), r["doc_id"]
+        assert r["doc_meta"].asDict() == {
+            k: meta.get(k, dflt) for k, _, dflt in extract.META_FIELDS
+        }, r["doc_id"]
 
 
 def test_span_budget_slicing_invisible(spark, monkeypatch):

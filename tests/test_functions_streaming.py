@@ -169,8 +169,7 @@ def test_parquet_pushdown_and_pruning(spark, tmp_path):
 
 def test_extract_plan_shape(spark):
     """Default plan: ONE salt exchange (hashpartitioning on xxhash64)
-    feeding ONE Python kernel stage; two-tier routing doubles both only
-    when explicitly requested."""
+    feeding ONE Python kernel stage."""
     plan = (
         extract.extract(datagen.fixture_spans(spark))
         ._jdf.queryExecution()
@@ -179,14 +178,6 @@ def test_extract_plan_shape(spark):
     )
     assert "xxhash64(doc_id" in plan
     assert plan.count("MapInPandas") == 1
-
-    plan2 = (
-        extract.extract(datagen.fixture_spans(spark), mega_threshold=1000)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan2.count("MapInPandas") == 2  # small tier + mega tier
 
 
 def test_streaming_near_dup_matches_batch(spark, tmp_path):

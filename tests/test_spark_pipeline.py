@@ -1,6 +1,6 @@
 """Spark end-to-end pipeline tests: span table -> extraction -> renditions
 -> navigation, including shuffle-invariance (salted vs unsalted plans must
-produce identical rows) and the mega-doc routing path."""
+produce identical rows) and a mega-doc on the default plan."""
 
 import json
 
@@ -47,15 +47,17 @@ def test_salting_is_semantically_invisible(spark):
     assert a == b
 
 
-def test_mega_doc_routing(spark):
+def test_mega_doc_default_path(spark):
     spans = datagen.fixture_spans(spark, include_mega=True)
-    out = extract.extract(spans, mega_threshold=1000)
+    out = extract.extract(spans)
     rows = {r["doc_id"]: r["n_blocks"] for r in out.collect()}
     assert rows["mega_doc-00000000"] == 2000
 
 
-def test_renditions_on_spark(extracted, ref_result):
-    with_r = renditions.with_renditions(extracted, formats=("html", "json", "csv", "meta"))
+def test_renditions_on_spark(spark, ref_result):
+    with_r = extract.extract(
+        datagen.fixture_spans(spark), formats=("html", "json", "csv", "meta")
+    )
     rows = {r["doc_id"]: r for r in with_r.collect()}
     br = rows["business_report-00000000"]
     # differential: rendition columns equal reference library output
