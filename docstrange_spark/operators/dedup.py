@@ -238,6 +238,80 @@ def bucket_pairs(
     )
 
 
+def check_max_hamming(max_hamming: int, n_words: int) -> None:
+    """Reject a ``max_hamming`` outside the recall guarantee of
+    :func:`banded_hamming_pairs` over ``n_words`` 32-bit words: with
+    ``n_bands = 4 * n_words`` byte-bands, two signatures within hamming
+    ``n_bands - 1`` must agree on at least one band (pigeonhole). Callers
+    run it before touching their input."""
+    n_bands = 4 * n_words
+    if not 0 <= max_hamming < n_bands:
+        raise ValueError(
+            f"max_hamming must be in [0, {n_bands - 1}] for the "
+            f"{n_bands}-band pigeonhole guarantee (got {max_hamming})"
+        )
+
+
+def banded_hamming_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    words: list[str],
+    max_hamming: int,
+    max_bucket_size: int | None = None,
+    out_a: str = "doc_a",
+    out_b: str = "doc_b",
+) -> DataFrame:
+    """Near-duplicate pairs over a one-row-per-id signature of
+    non-negative 32-bit ``words`` columns: byte ``b`` of word ``w`` is
+    band ``4w + b``; ids sharing ANY band pair up through
+    :func:`bucket_pairs` (never all-pairs, ``max_bucket_size`` chain-caps
+    degenerate bands), then an id-keyed join back to ``sigs`` keeps the
+    pairs whose hamming distance — the sum of ``bit_count(xor)`` over
+    the words, JVM-side — is ``<= max_hamming`` (a value that passed
+    :func:`check_max_hamming`). Returns (``out_a``, ``out_b``,
+    hamming), ``out_a`` < ``out_b``. SimHash passes one word, the image
+    and audio signatures two."""
+    bands = sigs.select(
+        id_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(4 * w + b).alias("band"),
+                        (F.floor(F.col(word) / (256**b)) % 256)
+                        .cast("long")
+                        .alias("v"),
+                    )
+                    for w, word in enumerate(words)
+                    for b in range(4)
+                ]
+            )
+        ).alias("bv"),
+    ).select(id_col, "bv.band", "bv.v")
+    pairs = bucket_pairs(
+        bands, ["band", "v"], id_col, max_bucket_size=max_bucket_size,
+        out_a=out_a, out_b=out_b,
+    )
+
+    def side(out: str) -> DataFrame:
+        return sigs.select(
+            F.col(id_col).alias(out),
+            *[F.col(word).alias(f"{out}_{w}") for w, word in enumerate(words)],
+        )
+
+    terms = [
+        F.bit_count(F.col(f"{out_a}_{w}").bitwiseXOR(F.col(f"{out_b}_{w}")))
+        for w in range(len(words))
+    ]
+    ham = sum(terms[1:], terms[0]).cast("long")
+    return (
+        pairs.join(side(out_a), out_a)
+        .join(side(out_b), out_b)
+        .select(out_a, out_b, ham.alias("hamming"))
+        .where(F.col("hamming") <= max_hamming)
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -779,9 +853,6 @@ def _simhash(df: DataFrame, bits: int, id_col: str, text_col: str) -> DataFrame:
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-SIMHASH_BANDS = 4  # 32-bit simhash split into 4 byte-bands for pairing
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -791,47 +862,27 @@ def simhash_pairs(
 ) -> DataFrame:
     """SimHash near-duplicate candidate pairs, the second classic
     near-dup family next to MinHash-LSH (Charikar 2002 / Manku et al.'s
-    simhash crawl-dedup, public knowledge): band the 32-bit
-    ``simhash32`` into 4 byte-bands, pair documents sharing ANY band
-    (pigeonhole: two signatures within hamming distance 3 must agree on
-    at least one of 4 bands), then verify by exact hamming distance
-    ``<= max_hamming``. Returns (doc_a, doc_b, hamming), doc_a < doc_b.
+    simhash crawl-dedup, public knowledge): :func:`banded_hamming_pairs`
+    over the one-word ``simhash32`` signature — 4 byte-bands, pair
+    documents sharing ANY band, verify by exact hamming distance
+    ``<= max_hamming``. The pigeonhole only guarantees recall up to
+    hamming 3 (one flipped bit per byte shares no band), so
+    ``max_hamming`` outside [0, 3] raises ``ValueError`` before ``df``
+    is touched. Returns (doc_a, doc_b, hamming), doc_a < doc_b.
 
     Scale shape: one simhash aggregation shuffle, then the shared
     ``bucket_pairs`` band machinery (never all-pairs; ``max_bucket_size``
     chain-caps degenerate bands exactly like the MinHash path), then an
     id-keyed join back to the 1-row-per-doc signature table to compute
-    hamming JVM-side (``bit_count(xor)``) — candidate-sized, not
-    corpus-sized. At 10^12 docs a byte-band still buckets n/256 docs,
-    so production runs SET ``max_bucket_size`` (and would widen to a
-    64-bit signature with 6-7 bands — the machinery is
-    width-independent).
+    hamming JVM-side — candidate-sized, not corpus-sized. At 10^12 docs
+    a byte-band still buckets n/256 docs, so production runs SET
+    ``max_bucket_size`` (and would widen to a 64-bit two-word signature
+    with 8 bands, as the image and audio paths do).
     """
-    sigs = simhash32(df, id_col=id_col, text_col=text_col)
-    bands = sigs.select(
-        F.col("doc_id"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    (F.floor(F.col("simhash") / (256 ** b)) % 256).alias("v"),
-                )
-                for b in range(SIMHASH_BANDS)
-            ])
-        ).alias("bv"),
-    ).select("doc_id", "bv.band", "bv.v")
-    pairs = bucket_pairs(
-        bands, ["band", "v"], "doc_id", max_bucket_size=max_bucket_size
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sa"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sb"))
-    ham = F.bit_count(
-        F.col("sa").bitwiseXOR(F.col("sb"))
-    ).cast("long")
-    return (
-        pairs.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
+    check_max_hamming(max_hamming, 1)
+    return banded_hamming_pairs(
+        simhash32(df, id_col=id_col, text_col=text_col),
+        "doc_id", ["simhash"], max_hamming, max_bucket_size,
     )
 
 
@@ -965,6 +1016,22 @@ def _gram_occurrences(df: DataFrame, id_col: str, text_col: str, n: int):
     return base, occ
 
 
+def _dup_grams(occ: DataFrame, min_count: int) -> DataFrame:
+    """The occurrences of every gram seen ``min_count`` or more times
+    corpus-wide: a count window over the gram-keyed exchange rather than
+    a count aggregation joined back — the join formulation referenced
+    the gram-explosion lineage twice (Spark re-executes it per reference
+    — 12 exchanges in the measured plan), the window references it once.
+    A degenerate gram's partition is processed by the sort-based window
+    (spillable rows, no collected array), the same boundedness the join
+    had."""
+    return (
+        occ.withColumn("_ot", F.count("*").over(Window.partitionBy("gram")))
+        .where(F.col("_ot") >= min_count)
+        .drop("_ot")
+    )
+
+
 def dup_ngram_stats(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -978,22 +1045,10 @@ def dup_ngram_stats(
     repeats included, matching exact-substring semantics) reaches
     ``min_count``; dup_tokens is the size of the UNION of the marked
     n-token spans (overlaps merged via the doc-partitioned window), so
-    it never exceeds n_tokens.
-
-    The duplicated-gram filter is a count window over the gram-keyed
-    exchange rather than a count aggregation joined back: the join
-    formulation referenced the gram-explosion lineage twice (Spark
-    re-executes it per reference — 12 exchanges in the measured plan),
-    the window references it once. A degenerate gram's partition is
-    processed by the sort-based window (spillable rows, no collected
-    array), the same boundedness the join had."""
+    it never exceeds n_tokens. The duplicated grams come from
+    :func:`_dup_grams`."""
     base, occ = _gram_occurrences(df, id_col, text_col, n)
-    w_gram = Window.partitionBy("gram")
-    marked = (
-        occ.withColumn("_ot", F.count("*").over(w_gram))
-        .where(F.col("_ot") >= min_count)
-        .drop("_ot")
-    )
+    marked = _dup_grams(occ, min_count)
     w_prev = (
         Window.partitionBy("doc_id")
         .orderBy("start")
@@ -1062,15 +1117,9 @@ def dup_span_scrub(
     span to its n positions, distinct) rather than merged intervals:
     the per-doc position set is bounded by document length, and the
     anti-join keeps token reassembly a single doc-keyed aggregation.
-    The duplicated-gram filter is a count window over the gram exchange
-    (single reference to the explosion lineage — see dup_ngram_stats)."""
+    The duplicated grams come from :func:`_dup_grams`."""
     base, occ = _gram_occurrences(df, id_col, text_col, n)
-    w_gram = Window.partitionBy("gram")
-    marked = (
-        occ.withColumn("_ot", F.count("*").over(w_gram))
-        .where(F.col("_ot") >= min_count)
-        .drop("_ot")
-    )
+    marked = _dup_grams(occ, min_count)
     covered_pos = marked.select(
         "doc_id",
         F.explode(

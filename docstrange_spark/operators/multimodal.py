@@ -10,6 +10,14 @@ unless ``fake=True`` substitutes the deterministic hash-decode, and
 ``frame_sample_plan`` remains the honestly-stubbed video path. Swapping
 in real codec libs extends ``decode_media``'s dispatch, not the plan.
 
+Two Python kernels: ``extract_features`` and one per-payload
+``mapInPandas`` pass (``_per_payload``) behind ``resize_images``,
+``image_dhash`` and ``audio_fingerprint``. The dHash and audio
+fingerprint are both 64 bits packed as two 32-bit words; their
+near-dup pairs and clusters share one body over
+``dedup.banded_hamming_pairs`` (8 byte-bands, ``max_hamming`` in
+[0, 7]) and ``dedup.connected_components``.
+
 Reference linkage: docstrange treats media as whole-file inputs to the
 OCR/VLM models (processors/image_processor.py:47-92,
 processors/pdf_processor.py:123-183); here media rides alongside text
@@ -28,6 +36,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .dedup import banded_hamming_pairs, check_max_hamming, connected_components
 
 MEDIA_SCHEMA_DDL = (
     "media_ref string, kind string, payload binary, "
@@ -209,15 +219,24 @@ def _fake_features(payload: bytes) -> list[float]:
     ]
 
 
+def _decode_image(payload: bytes) -> tuple[str, np.ndarray | None]:
+    """Sniff one payload: (format, (H, W, C) uint8 pixels) for BMP and
+    PPM/PGM, (format, None) for anything else."""
+    fmt = sniff_format(payload)
+    if fmt == "bmp":
+        return fmt, decode_bmp(payload)
+    if fmt in ("ppm", "pgm"):
+        return fmt, decode_ppm(payload)
+    return fmt, None
+
+
 def decode_media(payload: bytes, kind: str | None = None, fake: bool = False):
     """Decode a payload by sniffed format: images -> (H, W, C) uint8,
     audio -> (samples, rate). Unknown/compressed formats raise unless
     ``fake=True`` degrades to the deterministic hash-decode."""
-    fmt = sniff_format(payload)
-    if fmt in ("ppm", "pgm"):
-        return decode_ppm(payload)
-    if fmt == "bmp":
-        return decode_bmp(payload)
+    fmt, img = _decode_image(payload)
+    if img is not None:
+        return img
     if fmt == "wav":
         return decode_wav(payload)
     if fake:
@@ -230,9 +249,8 @@ def decode_media(payload: bytes, kind: str | None = None, fake: bool = False):
 
 
 def _feature_row(payload: bytes, fake: bool) -> tuple[str, int, int, list[float]]:
-    fmt = sniff_format(payload)
-    if fmt in ("ppm", "pgm", "bmp"):
-        img = decode_ppm(payload) if fmt != "bmp" else decode_bmp(payload)
+    fmt, img = _decode_image(payload)
+    if img is not None:
         return fmt, img.shape[1], img.shape[0], _image_features(img)
     if fmt == "wav":
         x, rate = decode_wav(payload)
@@ -285,6 +303,25 @@ def extract_features(media: DataFrame, fake: bool = False) -> DataFrame:
     )
 
 
+def _per_payload(media: DataFrame, schema: str, fn) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` pass over (media_ref, payload):
+    ``fn(payload bytes)`` returns the row's remaining columns as a tuple,
+    or None to skip the payload. ``schema`` is the output DDL, media_ref
+    first."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
+                out = fn(bytes(payload) if payload is not None else b"")
+                if out is not None:
+                    rows.append((ref, *out))
+            yield pd.DataFrame(rows, columns=cols)
+
+    return media.select("media_ref", "payload").mapInPandas(run, schema=schema)
+
+
 THUMB_SCHEMA_DDL = "media_ref string, format string, thumb binary"
 
 
@@ -292,23 +329,13 @@ def resize_images(media: DataFrame, height: int = 8, width: int = 8) -> DataFram
     """Image payloads -> nearest-neighbor thumbnails re-encoded as PPM
     (a real decode -> transform -> encode pipeline, all in-kernel)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt = sniff_format(payload)
-                if fmt not in ("ppm", "pgm", "bmp"):
-                    continue  # image-only op
-                img = decode_bmp(payload) if fmt == "bmp" else decode_ppm(payload)
-                rows.append(
-                    (ref, fmt, encode_ppm(resize_nearest(img, height, width)))
-                )
-            yield pd.DataFrame(rows, columns=["media_ref", "format", "thumb"])
+    def thumb(payload: bytes):
+        fmt, img = _decode_image(payload)
+        if img is None:
+            return None  # image-only op
+        return fmt, encode_ppm(resize_nearest(img, height, width))
 
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=THUMB_SCHEMA_DDL
-    )
+    return _per_payload(media, THUMB_SCHEMA_DDL, thumb)
 
 
 def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
@@ -333,27 +360,28 @@ def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
 DHASH_SCHEMA_DDL = "media_ref string, dhash_hi long, dhash_lo long, height int, width int"
 
 
+def _words64(bits: np.ndarray) -> tuple[int, int]:
+    """64 bits, index 0 first -> two 32-bit words, MSB-first: hi = bits
+    0-31, lo = bits 32-63. Both words stay positive in every engine,
+    which sidesteps signed-64 portability; hamming distance is
+    bit_count(xor(hi)) + bit_count(xor(lo))."""
+    hi, lo = np.packbits(bits).view(">u4")
+    return int(hi), int(lo)
+
+
 def dhash_bits(img: np.ndarray) -> tuple[int, int]:
     """64-bit difference hash (dHash — Krawetz 2013, public knowledge)
     of one decoded image, returned as two 32-bit words (hi = bits of
     rows 0-3, lo = rows 4-7; bit index y*8+x, MSB-first within each
-    word). The split-word layout sidesteps signed-64 portability: both
-    words stay positive in every engine, and hamming distance is
-    bit_count(xor(hi)) + bit_count(xor(lo)). Gray = integer mean of the
-    channels; downsample = the shared nearest-neighbor resize to 8x9;
-    bit = left pixel strictly brighter than its right neighbor."""
+    word — see :func:`_words64`). Gray = integer mean of the channels;
+    downsample = the shared nearest-neighbor resize to 8x9; bit = left
+    pixel strictly brighter than its right neighbor."""
     if img.ndim == 3:
         gray = img.astype(np.uint32).sum(axis=2) // img.shape[2]
     else:
         gray = img.astype(np.uint32)
     small = resize_nearest(gray, 8, 9)
-    bits = (small[:, :8] > small[:, 1:]).astype(np.uint8).reshape(-1)
-    hi = lo = 0
-    for idx in range(32):
-        hi = (hi << 1) | int(bits[idx])
-    for idx in range(32, 64):
-        lo = (lo << 1) | int(bits[idx])
-    return hi, lo
+    return _words64((small[:, :8] > small[:, 1:]).reshape(-1))
 
 
 def image_dhash(media: DataFrame) -> DataFrame:
@@ -362,28 +390,49 @@ def image_dhash(media: DataFrame) -> DataFrame:
     skipping non-image payloads. Returns
     (media_ref, dhash_hi, dhash_lo, height, width)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                fmt = sniff_format(payload)
-                if fmt not in ("ppm", "pgm", "bmp"):
-                    continue
-                img = decode_bmp(payload) if fmt == "bmp" else decode_ppm(payload)
-                hi, lo = dhash_bits(img)
-                rows.append((ref, hi, lo, img.shape[0], img.shape[1]))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "dhash_hi", "dhash_lo", "height", "width"],
-            )
+    def dhash(payload: bytes):
+        _, img = _decode_image(payload)
+        if img is None:
+            return None
+        return (*dhash_bits(img), img.shape[0], img.shape[1])
 
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=DHASH_SCHEMA_DDL
+    return _per_payload(media, DHASH_SCHEMA_DDL, dhash)
+
+
+def _near_dups(
+    signature, words: list[str], media: DataFrame, max_hamming: int,
+    max_bucket_size: int | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(signature table, verified pairs) for one 64-bit media signature:
+    ``max_hamming`` is checked before ``media`` is touched, the
+    ``signature(media)`` table is localCheckpoint-ed (banding, both
+    hamming joins and the cluster vertices reference it, and
+    uncheckpointed lineage would re-decode the corpus per reference),
+    then :func:`dedup.banded_hamming_pairs` over its two ``words``."""
+    check_max_hamming(max_hamming, len(words))
+    sigs = signature(media).select("media_ref", *words).localCheckpoint()
+    return sigs, banded_hamming_pairs(
+        sigs, "media_ref", words, max_hamming, max_bucket_size,
+        out_a="ref_a", out_b="ref_b",
     )
 
 
-IMG_BANDS = 8  # 8 byte-bands over the 64-bit dhash
+def _clusters(sigs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Connected components of the near-dup pairs with min-ref labels,
+    every signature row a vertex: (media_ref, cluster_rep)."""
+    # connected_components names its output (doc_id, cluster_rep)
+    # regardless of id_col — map back to the media key
+    return connected_components(
+        sigs.select("media_ref"),
+        pairs.select(F.col("ref_a").alias("doc_a"), F.col("ref_b").alias("doc_b")),
+        id_col="media_ref",
+    ).select(
+        F.col("doc_id").alias("media_ref"),
+        F.col("cluster_rep").cast("string").alias("cluster_rep"),
+    )
+
+
+_DHASH_WORDS = ["dhash_hi", "dhash_lo"]
 
 
 def image_near_dups(
@@ -394,84 +443,20 @@ def image_near_dups(
     """Image near-duplicate pairs over the dHash signature — the visual
     twin of ``dedup.simhash_pairs``: band the 64-bit hash into 8
     byte-bands, pair images sharing ANY band (pigeonhole: hamming <= 7
-    implies at least one identical band), verify by exact hamming
+    implies at least one identical band, so ``max_hamming`` outside
+    [0, 7] raises ``ValueError``), verify by exact hamming
     ``<= max_hamming``. Returns (ref_a, ref_b, hamming), ref_a < ref_b.
 
-    Scale shape: ONE Python decode pass (the signature table is
-    localCheckpoint-ed — banding and both verify joins reference it,
-    and uncheckpointed lineage would re-decode the corpus three
-    times); then the shared ``bucket_pairs`` band machinery (never
-    all-pairs, chain-cap available) and an id-keyed join back for
-    hamming in whole-stage codegen. At 10^10 images a byte-band still
-    buckets n/256 per band value — production sets ``max_bucket_size``
-    exactly like the text paths."""
-    if not 0 <= max_hamming < IMG_BANDS:
-        raise ValueError(
-            f"max_hamming must be in [0, {IMG_BANDS - 1}] for the "
-            f"{IMG_BANDS}-band pigeonhole guarantee (got {max_hamming})"
-        )
-    sigs = image_dhash(media).select(
-        "media_ref", "dhash_hi", "dhash_lo"
-    ).localCheckpoint()
-    return _dhash_pairs(sigs, max_hamming, max_bucket_size)
-
-
-def _dhash_pairs(
-    sigs: DataFrame, max_hamming: int, max_bucket_size: int | None
-) -> DataFrame:
-    """Band + verify over an already-materialized signature table
-    (shared by image_near_dups and image_clusters so the decode kernel
-    runs exactly once per pipeline)."""
-    from docstrange_spark.operators.dedup import bucket_pairs
-
-    bands = sigs.select(
-        "media_ref",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        (
-                            F.floor(
-                                F.col("dhash_hi" if b < 4 else "dhash_lo")
-                                / (256 ** (b % 4))
-                            )
-                            % 256
-                        ).cast("long").alias("v"),
-                    )
-                    for b in range(IMG_BANDS)
-                ]
-            )
-        ).alias("bv"),
-    ).select("media_ref", "bv.band", "bv.v")
-    pairs = bucket_pairs(
-        bands,
-        ["band", "v"],
-        "media_ref",
-        max_bucket_size=max_bucket_size,
-        out_a="ref_a",
-        out_b="ref_b",
-    )
-    sa = sigs.select(
-        F.col("media_ref").alias("ref_a"),
-        F.col("dhash_hi").alias("ha"),
-        F.col("dhash_lo").alias("la"),
-    )
-    sb = sigs.select(
-        F.col("media_ref").alias("ref_b"),
-        F.col("dhash_hi").alias("hb"),
-        F.col("dhash_lo").alias("lb"),
-    )
-    ham = (
-        F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-        + F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
-    ).cast("long")
-    return (
-        pairs.join(sa, "ref_a")
-        .join(sb, "ref_b")
-        .select("ref_a", "ref_b", ham.alias("hamming"))
-        .where(F.col("hamming") <= max_hamming)
-    )
+    Scale shape: ONE Python decode pass over a checkpointed signature
+    table, then ``dedup.banded_hamming_pairs`` — the shared
+    ``bucket_pairs`` band machinery (never all-pairs, chain-cap
+    available) and an id-keyed join back for hamming in whole-stage
+    codegen. At 10^10 images a byte-band still buckets n/256 per band
+    value — production sets ``max_bucket_size`` exactly like the text
+    paths."""
+    return _near_dups(
+        image_dhash, _DHASH_WORDS, media, max_hamming, max_bucket_size
+    )[1]
 
 
 def image_clusters(
@@ -486,31 +471,12 @@ def image_clusters(
     (media_ref, cluster_rep) for every IMAGE payload; singletons are
     their own rep.
 
-    Scale shape: one decode pass (shared checkpointed signature
-    table feeds banding, both hamming joins, and the component
-    vertices), the shared bucket_pairs machinery, then
+    Scale shape: the :func:`image_near_dups` plan (its checkpointed
+    signature table also supplies the component vertices), then
     dedup.connected_components' O(log diameter) pointer jumping — the
     same plan as the text paths, keyed by media_ref strings."""
-    from docstrange_spark.operators.dedup import connected_components
-
-    if not 0 <= max_hamming < IMG_BANDS:
-        raise ValueError(
-            f"max_hamming must be in [0, {IMG_BANDS - 1}] for the "
-            f"{IMG_BANDS}-band pigeonhole guarantee (got {max_hamming})"
-        )
-    sigs = image_dhash(media).select(
-        "media_ref", "dhash_hi", "dhash_lo"
-    ).localCheckpoint()
-    pairs = _dhash_pairs(sigs, max_hamming, max_bucket_size).select(
-        F.col("ref_a").alias("doc_a"), F.col("ref_b").alias("doc_b")
-    )
-    # connected_components names its output (doc_id, cluster_rep)
-    # regardless of id_col — map back to the media key
-    return connected_components(
-        sigs.select("media_ref"), pairs, id_col="media_ref"
-    ).select(
-        F.col("doc_id").alias("media_ref"),
-        F.col("cluster_rep").cast("string").alias("cluster_rep"),
+    return _clusters(
+        *_near_dups(image_dhash, _DHASH_WORDS, media, max_hamming, max_bucket_size)
     )
 
 
@@ -541,13 +507,7 @@ def afp_bits(samples_i16: np.ndarray) -> tuple[int, int]:
         raise ValueError(f"need >= {AFP_FRAMES} samples, got {n}")
     used = samples_i16[: flen * AFP_FRAMES].astype(np.int64)
     energy = np.abs(used).reshape(AFP_FRAMES, flen).sum(axis=1)
-    bits = (energy[:-1] > energy[1:]).astype(np.uint8)
-    hi = lo = 0
-    for idx in range(32):
-        hi = (hi << 1) | int(bits[idx])
-    for idx in range(32, 64):
-        lo = (lo << 1) | int(bits[idx])
-    return hi, lo
+    return _words64(energy[:-1] > energy[1:])
 
 
 def audio_fingerprint(media: DataFrame) -> DataFrame:
@@ -557,44 +517,22 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
     short for the 65-frame grid. Returns
     (media_ref, afp_hi, afp_lo, n_samples, sample_rate)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for ref, payload in zip(pdf["media_ref"], pdf["payload"]):
-                payload = bytes(payload) if payload is not None else b""
-                if sniff_format(payload) != "wav":
-                    continue
-                x, rate = decode_wav(payload)
-                # decode_wav scales by 1/32767; rint recovers the exact
-                # int16 (|v| <= 32767 has 15 bits, float32 carries 24)
-                ints = np.rint(x * 32767.0).astype(np.int64)
-                mono = ints.sum(axis=1) // ints.shape[1]
-                if mono.shape[0] < AFP_FRAMES:
-                    continue
-                hi, lo = afp_bits(mono)
-                rows.append((ref, hi, lo, mono.shape[0], rate))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_ref", "afp_hi", "afp_lo", "n_samples",
-                    "sample_rate",
-                ],
-            )
+    def fingerprint(payload: bytes):
+        if sniff_format(payload) != "wav":
+            return None
+        x, rate = decode_wav(payload)
+        # decode_wav scales by 1/32767; rint recovers the exact int16
+        # (|v| <= 32767 has 15 bits, float32 carries 24)
+        ints = np.rint(x * 32767.0).astype(np.int64)
+        mono = ints.sum(axis=1) // ints.shape[1]
+        if mono.shape[0] < AFP_FRAMES:
+            return None
+        return (*afp_bits(mono), mono.shape[0], rate)
 
-    return media.select("media_ref", "payload").mapInPandas(
-        run, schema=AFP_SCHEMA_DDL
-    )
+    return _per_payload(media, AFP_SCHEMA_DDL, fingerprint)
 
 
-def _afp_sigs(media: DataFrame) -> DataFrame:
-    """Checkpointed fingerprint table renamed to the shared dhash
-    column layout, so the byte-band pairing machinery is reused
-    verbatim (one decode pass feeds banding and both hamming joins)."""
-    return audio_fingerprint(media).select(
-        "media_ref",
-        F.col("afp_hi").alias("dhash_hi"),
-        F.col("afp_lo").alias("dhash_lo"),
-    ).localCheckpoint()
+_AFP_WORDS = ["afp_hi", "afp_lo"]
 
 
 def audio_near_dups(
@@ -605,20 +543,18 @@ def audio_near_dups(
     """Audio near-duplicate pairs over the frame-energy fingerprint —
     the acoustic twin of :func:`image_near_dups`: 8 byte-bands over the
     64-bit fingerprint (pigeonhole: hamming <= 7 implies a shared
-    band), pair clips sharing ANY band, verify by exact hamming
-    ``<= max_hamming``. Returns (ref_a, ref_b, hamming), ref_a < ref_b.
+    band, so ``max_hamming`` outside [0, 7] raises ``ValueError``), pair
+    clips sharing ANY band, verify by exact hamming ``<= max_hamming``.
+    Returns (ref_a, ref_b, hamming), ref_a < ref_b.
 
     Scale shape: identical to the image path — one Python decode pass
-    over a checkpointed signature table, the shared ``bucket_pairs``
-    band machinery (never all-pairs, chain-cap via
-    ``max_bucket_size``), hamming verification in whole-stage
-    codegen."""
-    if not 0 <= max_hamming < IMG_BANDS:
-        raise ValueError(
-            f"max_hamming must be in [0, {IMG_BANDS - 1}] for the "
-            f"{IMG_BANDS}-band pigeonhole guarantee (got {max_hamming})"
-        )
-    return _dhash_pairs(_afp_sigs(media), max_hamming, max_bucket_size)
+    over a checkpointed signature table, then
+    ``dedup.banded_hamming_pairs`` (never all-pairs, chain-cap via
+    ``max_bucket_size``, hamming verification in whole-stage
+    codegen)."""
+    return _near_dups(
+        audio_fingerprint, _AFP_WORDS, media, max_hamming, max_bucket_size
+    )[1]
 
 
 def audio_clusters(
@@ -630,20 +566,6 @@ def audio_clusters(
     components with min-ref labels, exactly :func:`image_clusters`
     over the acoustic signature. Returns (media_ref, cluster_rep) for
     every WAV payload; singletons are their own rep."""
-    from docstrange_spark.operators.dedup import connected_components
-
-    if not 0 <= max_hamming < IMG_BANDS:
-        raise ValueError(
-            f"max_hamming must be in [0, {IMG_BANDS - 1}] for the "
-            f"{IMG_BANDS}-band pigeonhole guarantee (got {max_hamming})"
-        )
-    sigs = _afp_sigs(media)
-    pairs = _dhash_pairs(sigs, max_hamming, max_bucket_size).select(
-        F.col("ref_a").alias("doc_a"), F.col("ref_b").alias("doc_b")
-    )
-    return connected_components(
-        sigs.select("media_ref"), pairs, id_col="media_ref"
-    ).select(
-        F.col("doc_id").alias("media_ref"),
-        F.col("cluster_rep").cast("string").alias("cluster_rep"),
+    return _clusters(
+        *_near_dups(audio_fingerprint, _AFP_WORDS, media, max_hamming, max_bucket_size)
     )

@@ -1,15 +1,32 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search and vector tooling over an embedding column
+(array<float>).
 
 - ``knn_bruteforce``: exact cosine top-k — broadcast the (small) query
   set against the corpus; the dot product runs JVM-side via zip_with +
   aggregate (no Python), one shuffle for the per-query top-k window.
-- ``knn_lsh``: the scale path — random-hyperplane LSH bucketing
-  (deterministic seeded planes); candidates share a bucket, exact cosine
-  re-rank inside the bucket. At 10^12 rows the bucket join replaces the
-  full cross product; recall is tunable by planes/tables.
+  ``hard_negatives`` is the same shape with a label-mismatch predicate.
+- ``knn_lsh`` / ``build_lsh_index`` + ``knn_lsh_probe``: the scale path
+  — random-hyperplane LSH bucketing (deterministic seeded planes);
+  candidates share a bucket, exact cosine re-rank inside the bucket. At
+  10^12 rows the bucket join replaces the full cross product; recall is
+  tunable by planes/tables. ``lsh_bucket_candidates`` and
+  ``embedding_dedup_pairs`` reuse the bucketing for near-dup pairs.
+- ``knn_ivf`` / ``ivf_train`` / ``kmeans_step`` / ``semantic_dedup``:
+  inverted-file cells from md5 seed or trained centroids.
+- ``quantize_embeddings`` / ``quant_error`` (int8), ``pq_encode`` /
+  ``pq_error`` (product quantization) and ``embedding_project``
+  (random projection).
+
+Shared pieces: one md5 matrix builder (``_md5_matrix``) behind
+``hyperplanes``, ``ivf_centroids``, ``projection_planes`` and
+``pq_codebooks``; one (vid, vec, nrm) frame (``lsh_vector_table``); one
+per-query rank step (``_rank_per_query``) for every knn-shaped output;
+one nearest-codeword kernel (``_pq_nearest``) for both PQ operators.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 import pandas as pd
@@ -56,9 +73,7 @@ def knn_bruteforce(
     Result: (query_id, neighbor_id, rank, cosine) — cosine rounded to 4
     decimals; ties broken by neighbor_id for determinism.
     """
-    base = embeddings.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("vec")
-    ).withColumn("nrm", _norm(F.col("vec")))
+    base = lsh_vector_table(embeddings, id_col, vec_col)
     q = base.where(F.col("vid").isin(query_ids)).select(
         F.col("vid").alias("query_id"),
         F.col("vec").alias("qvec"),
@@ -72,42 +87,67 @@ def knn_bruteforce(
             _dot(F.col("qvec"), F.col("vec")) / (F.col("qnrm") * F.col("nrm")), 4
         ).alias("cosine"),
     )
+    return _rank_per_query(scored, top_k, "int")
+
+
+def _rank_per_query(scored: DataFrame, top_k: int, rank_type: str = "long") -> DataFrame:
+    """Per-query top-k of a (query_id, neighbor_id, ..., cosine) frame:
+    row_number over query_id by cosine desc, neighbor_id asc, kept while
+    ``<= top_k`` and inserted as ``rank`` (cast to ``rank_type``) just
+    before the trailing cosine column."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+        .select(
+            *[c for c in scored.columns if c != "cosine"],
+            F.col("rank").cast(rank_type).alias("rank"),
+            "cosine",
+        )
     )
 
 
-_PLANE_CACHE: dict[tuple[int, int, int], np.ndarray] = {}
+_MATRIX_CACHE: dict[tuple[str, tuple[int, ...]], np.ndarray] = {}
+
+
+def _md5_matrix(
+    prefix: str, shape: tuple[int, ...], out_shape: tuple[int, ...] | None = None
+) -> np.ndarray:
+    """Deterministic float64 matrix of ``shape``: the entry at index
+    ``(j0, j1, ...)`` is ``int(h, 16) / 2**31 - 1.0``, uniform in
+    [-1, 1), where ``h`` is the first 8 hex chars of md5 of
+    ``"{prefix}|{j0}|{j1}|..."`` (no prefix segment when ``prefix`` is
+    empty). The construction is cross-engine portable (DuckDB rebuilds
+    the exact same matrix in SQL). Reshaped to ``out_shape`` if given,
+    and cached per (prefix, shape) per process."""
+    key = (prefix, shape)
+    mat = _MATRIX_CACHE.get(key)
+    if mat is None:
+        head = [prefix] if prefix else []
+        keys = ("|".join(map(str, [*head, *idx])) for idx in np.ndindex(*shape))
+        vals = [
+            int(hashlib.md5(k.encode()).hexdigest()[:8], 16) / 2**31 - 1.0
+            for k in keys
+        ]
+        mat = _MATRIX_CACHE[key] = np.array(vals, dtype=np.float64).reshape(
+            out_shape or shape
+        )
+    return mat
 
 
 def hyperplanes(dim: int, n_planes: int = 8, n_tables: int = 8) -> np.ndarray:
     """Deterministic hyperplanes, shape (n_tables * n_planes, dim).
 
     Entries are uniform in [-1, 1), derived from md5 of ``"{t}|{p}|{i}"``
-    — a cross-engine-portable construction (DuckDB rebuilds the exact
-    same matrix in SQL), so the LSH bucketing itself is oracle-checkable
-    and no plane literals ever enter the Spark plan. Sign-projection LSH
-    only needs a distribution symmetric around zero, so uniform works as
-    well as Gaussian here. Cached per (dim, planes, tables) per process.
+    (:func:`_md5_matrix`, no prefix) — a cross-engine-portable
+    construction, so the LSH bucketing itself is oracle-checkable and no
+    plane literals ever enter the Spark plan. Sign-projection LSH only
+    needs a distribution symmetric around zero, so uniform works as well
+    as Gaussian here.
     """
-    key = (dim, n_planes, n_tables)
-    mat = _PLANE_CACHE.get(key)
-    if mat is None:
-        import hashlib
-
-        vals = np.empty((n_tables * n_planes, dim), dtype=np.float64)
-        for t in range(n_tables):
-            for p in range(n_planes):
-                for i in range(dim):
-                    h = hashlib.md5(f"{t}|{p}|{i}".encode()).hexdigest()[:8]
-                    vals[t * n_planes + p, i] = int(h, 16) / 2**31 - 1.0
-        mat = _PLANE_CACHE[key] = vals
-    return mat
+    return _md5_matrix("", (n_tables, n_planes, dim), (n_tables * n_planes, dim))
 
 
 def _bucket_udf(n_planes: int, n_tables: int):
@@ -198,10 +238,7 @@ def embedding_dedup_pairs(
     scalars cross the bucket shuffle — and the distinct pairs re-join
     the vectors for the exact re-rank, computing each pair's cosine
     ONCE instead of once per colliding table."""
-    base = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("nrm", _norm(F.col("vec")))
+    base = lsh_vector_table(embeddings, id_col, vec_col)
     pairs = lsh_bucket_candidates(
         embeddings, n_planes, n_tables, max_bucket_size, id_col, vec_col
     )
@@ -239,18 +276,7 @@ def ivf_centroids(dim: int, n_cells: int = 16) -> np.ndarray:
     as the hyperplanes, key prefix 'ivf'): the untrained starting point
     and the oracle-checkable configuration. Production would pass
     ``ivf_train(...)`` output instead."""
-    key = (-n_cells, 0, dim)  # distinct cache namespace from hyperplanes
-    mat = _PLANE_CACHE.get(key)
-    if mat is None:
-        import hashlib
-
-        vals = np.empty((n_cells, dim), dtype=np.float64)
-        for c in range(n_cells):
-            for i in range(dim):
-                h = hashlib.md5(f"ivf|{c}|{i}".encode()).hexdigest()[:8]
-                vals[c, i] = int(h, 16) / 2**31 - 1.0
-        mat = _PLANE_CACHE[key] = vals
-    return mat
+    return _md5_matrix("ivf", (n_cells, dim))
 
 
 def _probe_udf(centroids: np.ndarray | None, nprobe: int, n_cells: int = 16):
@@ -328,17 +354,7 @@ def knn_ivf(
             _dot(F.col("qvec"), F.col("vec")) / (F.col("qnrm") * F.col("nrm")), 4
         ).alias("cosine"),
     ).groupBy("query_id", "neighbor_id").agg(F.max("cosine").alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"),
-            "cosine",
-        )
-    )
+    return _rank_per_query(scored, top_k)
 
 
 def ivf_train(
@@ -402,10 +418,7 @@ def build_lsh_index(
     ``include_vectors=False``: the index is scalar-only
     (vid, tbl, bucket) and ``knn_lsh_probe(vectors=...)`` joins the
     single-copy vector table back for matched candidates only."""
-    base = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).withColumn("nrm", _norm(F.col("vec")))
+    base = lsh_vector_table(embeddings, id_col, vec_col)
     cols = ["vid", "vec", "nrm"] if include_vectors else ["vid"]
     return base.select(
         *cols,
@@ -418,7 +431,8 @@ def build_lsh_index(
 def lsh_vector_table(
     embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Single-copy (vid, vec, nrm) companion table for a scalar-only
+    """The (vid, vec as array<double>, nrm) frame every cosine scorer
+    starts from; also the single-copy companion table for a scalar-only
     ``build_lsh_index(include_vectors=False)`` index."""
     return embeddings.select(
         F.col(id_col).alias("vid"),
@@ -501,17 +515,7 @@ def knn_lsh_probe(
     dedup = scored.groupBy("query_id", "neighbor_id").agg(
         F.max("cosine").alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        dedup.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select(
-            "query_id", "neighbor_id",
-            F.col("rank").cast("long").alias("rank"), "cosine",
-        )
-    )
+    return _rank_per_query(dedup, top_k)
 
 
 def knn_lsh(
@@ -911,18 +915,7 @@ def projection_planes(out_dim: int, dim: int) -> np.ndarray:
     """Deterministic md5-derived signed projection matrix (key prefix
     'proj' — its own namespace next to the LSH hyperplanes and IVF
     centroids, same portable construction both engines can rebuild)."""
-    key = ("proj", out_dim, dim)
-    mat = _PLANE_CACHE.get(key)
-    if mat is None:
-        import hashlib
-
-        vals = np.empty((out_dim, dim), dtype=np.float64)
-        for j in range(out_dim):
-            for i in range(dim):
-                h = hashlib.md5(f"proj|{j}|{i}".encode()).hexdigest()[:8]
-                vals[j, i] = int(h, 16) / 2**31 - 1.0
-        mat = _PLANE_CACHE[key] = vals
-    return mat
+    return _md5_matrix("proj", (out_dim, dim))
 
 
 def embedding_project(
@@ -981,19 +974,27 @@ def pq_codebooks(m: int, k: int, dsub: int) -> np.ndarray:
     codebooks in SQL. Production would train each subspace codebook
     with k-means (ivf_train restricted to the subvector slice); the
     seed books are the oracle-checkable configuration."""
-    key = ("pq", m, k, dsub)
-    mat = _PLANE_CACHE.get(key)
-    if mat is None:
-        import hashlib
+    return _md5_matrix("pq", (m, k, dsub))
 
-        vals = np.empty((m, k, dsub), dtype=np.float64)
-        for s in range(m):
-            for c in range(k):
-                for i in range(dsub):
-                    h = hashlib.md5(f"pq|{s}|{c}|{i}".encode()).hexdigest()[:8]
-                    vals[s, c, i] = int(h, 16) / 2**31 - 1.0
-        mat = _PLANE_CACHE[key] = vals
-    return mat
+
+def _pq_nearest(vecs: pd.Series, m: int, k: int) -> tuple[np.ndarray, np.ndarray, int]:
+    """Nearest seed codeword per subspace for one non-empty batch of
+    vectors: (codes int32 (n, m), squared reconstruction error (n,),
+    dim). Squared L2, ties by codeword id; raises when ``m`` does not
+    divide the dimensionality."""
+    X = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+    n, dim = X.shape
+    if dim % m:
+        raise ValueError(f"PQ: dim {dim} not divisible by m={m}")
+    B = pq_codebooks(m, k, dim // m)
+    Xs = X.reshape(n, m, dim // m)
+    codes = np.empty((n, m), dtype=np.int32)
+    err = np.zeros(n)
+    for s in range(m):
+        d = ((Xs[:, s, None, :] - B[s][None, :, :]) ** 2).sum(-1)
+        codes[:, s] = np.argsort(d, axis=1, kind="stable")[:, 0]
+        err += d[np.arange(n), codes[:, s]]
+    return codes, err, dim
 
 
 def pq_encode(
@@ -1012,33 +1013,16 @@ def pq_encode(
     (vec_id, codes: array<int> length m).
 
     Scale shape: ONE mapInPandas pass, one (N, k) distance matrix per
-    subspace per Arrow batch — no shuffle at all; the codebooks ride
-    in the closure (m*k*dsub floats)."""
-    B = None  # built lazily from the batch dimensionality
+    subspace per Arrow batch — no shuffle at all; the seed codebooks
+    (m*k*dsub floats) are built worker-side from the batch
+    dimensionality and cached per process."""
 
     def encode(batches):
-        nonlocal B
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            )
-            dim = X.shape[1]
-            if dim % m:
-                raise ValueError(
-                    f"pq_encode: dim {dim} not divisible by m={m}"
-                )
-            dsub = dim // m
-            if B is None:
-                B = pq_codebooks(m, k, dsub)
-            Xs = X.reshape(len(X), m, dsub)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for s in range(m):
-                d = ((Xs[:, s, None, :] - B[s][None, :, :]) ** 2).sum(-1)
-                codes[:, s] = np.argsort(d, axis=1, kind="stable")[:, 0]
             out = pdf[["vid"]].copy()
-            out["codes"] = list(codes)
+            out["codes"] = list(_pq_nearest(pdf["vec"], m, k)[0])
             yield out
 
     base = embeddings.select(
@@ -1063,36 +1047,17 @@ def pq_error(
     compression_x) — the measurement that decides m/k before an IVF-PQ
     rollout. One Python stage, one 1-row aggregate; never materializes
     codes."""
-    B = None
 
     def sqerr(batches):
-        nonlocal B
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["vec"]]
-            )
-            dsub = X.shape[1] // m
-            if B is None:
-                B = pq_codebooks(m, k, dsub)
-            Xs = X.reshape(len(X), m, dsub)
-            err = np.zeros(len(X))
-            for s in range(m):
-                d = ((Xs[:, s, None, :] - B[s][None, :, :]) ** 2).sum(-1)
-                err += d[
-                    np.arange(len(X)),
-                    np.argsort(d, axis=1, kind="stable")[:, 0],
-                ]
-            yield pd.DataFrame({"sq_err": err, "dim": X.shape[1]})
+            _, err, dim = _pq_nearest(pdf["vec"], m, k)
+            yield pd.DataFrame({"sq_err": err, "dim": dim})
 
-    base = embeddings.select(
+    per = embeddings.select(
         F.col(vec_col).cast("array<double>").alias("vec")
-    ).withColumnRenamed("vec", "vec")
-
-    per = base.select(F.col("vec")).mapInPandas(
-        lambda it: sqerr(it), "sq_err double, dim int"
-    )
+    ).mapInPandas(sqerr, "sq_err double, dim int")
     bits = m * int(np.log2(k))
     return per.agg(
         F.count("*").cast("long").alias("n_vectors"),
@@ -1142,11 +1107,4 @@ def hard_negatives(
             _dot(F.col("qvec"), F.col("vec")) / (F.col("qnrm") * F.col("nrm")), 4
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= top_k)
-        .select("query_id", "neighbor_id", "neg_label", "rank", "cosine")
-    )
+    return _rank_per_query(scored, top_k)

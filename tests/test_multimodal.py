@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from docstrange_spark import datagen
+from docstrange_spark.operators import dedup
 from docstrange_spark.operators import multimodal as mm
 
 
@@ -109,6 +110,20 @@ def test_dhash_bits_known_image():
     assert 0 <= hi < 2**32 and 0 <= lo < 2**32
 
 
+def test_words64_matches_bit_loop():
+    # reference: the MSB-first shift loop, one bit at a time
+    rng = np.random.default_rng(3)
+    cases = [np.zeros(64, bool), np.ones(64, bool)]
+    cases += list(rng.integers(0, 2, size=(20, 64)).astype(bool))
+    for bits in cases:
+        hi = lo = 0
+        for b in bits[:32]:
+            hi = (hi << 1) | int(b)
+        for b in bits[32:]:
+            lo = (lo << 1) | int(b)
+        assert mm._words64(bits) == (hi, lo)
+
+
 def test_dhash_invariant_to_encode_roundtrip():
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
@@ -131,9 +146,25 @@ def test_image_near_dups_triples(spark):
         assert r["hamming"] <= 6
 
 
-def test_image_near_dups_max_hamming_bound():
-    with pytest.raises(ValueError):
-        mm.image_near_dups(None, max_hamming=8)
+@pytest.mark.parametrize(
+    "fn, max_hamming",
+    [
+        pytest.param(fn, h, id=f"{fn.__name__}={h}")
+        for fn, n_bands in [
+            (mm.image_near_dups, 8),
+            (mm.image_clusters, 8),
+            (mm.audio_near_dups, 8),
+            (mm.audio_clusters, 8),
+            (dedup.simhash_pairs, 4),
+        ]
+        for h in (-1, n_bands)
+    ],
+)
+def test_max_hamming_bound(fn, max_hamming):
+    # the byte-band pigeonhole only guarantees recall below the band
+    # count; the bound is checked before the input is touched (None)
+    with pytest.raises(ValueError, match="pigeonhole"):
+        fn(None, max_hamming=max_hamming)
 
 
 def test_afp_bits_known_signal():
@@ -196,13 +227,6 @@ def test_audio_clusters_reps(spark):
         base = did // 3
         expect = min(f"aud-{base * 3 + j}" for j in range(3))
         assert clusters[f"aud-{did}"] == expect
-
-
-def test_audio_near_dups_max_hamming_bound():
-    with pytest.raises(ValueError):
-        mm.audio_near_dups(None, max_hamming=8)
-    with pytest.raises(ValueError):
-        mm.audio_clusters(None, max_hamming=-1)
 
 
 def test_audio_fingerprint_skips_non_wav(spark):

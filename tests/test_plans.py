@@ -207,10 +207,9 @@ def test_audio_near_dups_single_decode_pass(spark):
     from docstrange_spark.operators import multimodal as mm
 
     docs = spark.range(0, 30).withColumnRenamed("id", "doc_id")
-    sigs = mm._afp_sigs(datagen.corpus_audio(docs))
     # checkpointed signature table: downstream banding + both hamming
     # joins must not re-run the decode kernel
-    df = mm._dhash_pairs(sigs, 6, None)
+    df = mm.audio_near_dups(datagen.corpus_audio(docs), max_hamming=6)
     assert plans.count_python_stages(df) == 0
 
 

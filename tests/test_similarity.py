@@ -20,13 +20,47 @@ from docstrange_spark.operators import similarity
 SF001 = "/root/testdata/sf0.01"
 
 
-def test_hyperplanes_md5_derivation_and_cache():
-    P = similarity.hyperplanes(8, n_planes=2, n_tables=3)
-    assert P.shape == (6, 8)
-    h = hashlib.md5(b"1|0|5").hexdigest()[:8]
-    assert P[1 * 2 + 0, 5] == int(h, 16) / 2**31 - 1.0
-    assert np.all(P >= -1.0) and np.all(P < 1.0)
-    assert similarity.hyperplanes(8, n_planes=2, n_tables=3) is P  # cached
+@pytest.mark.parametrize(
+    "build, args, shape, idx, key",
+    [
+        (similarity.hyperplanes, (8, 2, 3), (6, 8), (1 * 2 + 0, 5), "1|0|5"),
+        (similarity.ivf_centroids, (8, 4), (4, 8), (3, 5), "ivf|3|5"),
+        (similarity.projection_planes, (4, 8), (4, 8), (2, 7), "proj|2|7"),
+        (similarity.pq_codebooks, (2, 4, 3), (2, 4, 3), (1, 3, 2), "pq|1|3|2"),
+    ],
+    ids=["hyperplanes", "ivf_centroids", "projection_planes", "pq_codebooks"],
+)
+def test_md5_matrix_derivation_and_cache(build, args, shape, idx, key):
+    M = build(*args)
+    assert M.shape == shape
+    h = hashlib.md5(key.encode()).hexdigest()[:8]
+    assert M[idx] == int(h, 16) / 2**31 - 1.0
+    assert np.all(M >= -1.0) and np.all(M < 1.0)
+    assert build(*args) is M  # cached
+    assert any(v is M for v in similarity._MATRIX_CACHE.values())
+
+
+def test_md5_matrix_namespaces_do_not_collide():
+    # three (4, 8) matrices from different builders: the cache key
+    # carries the key prefix, so none is served another's entries
+    mats = [
+        similarity.hyperplanes(8, n_planes=1, n_tables=4),
+        similarity.ivf_centroids(8, 4),
+        similarity.projection_planes(4, 8),
+    ]
+    assert all(m.shape == (4, 8) for m in mats)
+    for i in range(3):
+        for j in range(i + 1, 3):
+            assert not np.array_equal(mats[i], mats[j])
+
+
+def test_pq_error_rejects_indivisible_dim(spark):
+    emb = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<float>"
+    )
+    for fn in (similarity.pq_encode, similarity.pq_error):
+        with pytest.raises(Exception, match="not divisible"):
+            fn(emb, m=2, k=4).collect()
 
 
 def test_knn_lsh_no_plan_literals_and_no_driver_action(spark):
