@@ -677,43 +677,56 @@ def paragraph_stats(
     """
     if max_occurrences < 1:
         raise ValueError(f"max_occurrences must be >= 1 (got {max_occurrences})")
-    # \Q...\E quotes the separator so F.split (a Java regex) treats it
-    # as the same LITERAL that array_join re-inserts and the DuckDB
-    # twin's string_split uses — an unquoted '|' or '. ' would
-    # regex-split per character and break the split+rejoin identity
-    paras = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\\Q" + sep + "\\E")
-        ).alias("pidx", "para"),
-    ).withColumn("phash", F.md5("para"))
+    paras = _segments(df, id_col, text_col, sep)
     counts = (
-        paras.select("phash", "doc_id")
+        paras.select("shash", "doc_id")
         .distinct()
-        .groupBy("phash")
+        .groupBy("shash")
         .agg(F.count("*").cast("long").alias("n_docs_with"))
     )
-    j = paras.join(counts, "phash")
-    is_boiler = F.col("n_docs_with") > max_occurrences
+    j = paras.join(counts, "shash")
+    return _strip_segments(j, F.col("n_docs_with") > max_occurrences, "n_paras", sep)
+
+
+def _segments(df: DataFrame, id_col: str, text_col: str, sep: str, *keep) -> DataFrame:
+    """(doc_id, *keep, idx, seg, shash): every ``sep``-separated segment
+    of the text with its position and md5 — the explode paragraph_stats
+    and boilerplate_lines both count over. \\Q...\\E quotes the
+    separator so F.split (a Java regex) treats it as the same LITERAL
+    that array_join re-inserts and the DuckDB twin's string_split uses
+    — an unquoted '|' or '. ' would regex-split per character and break
+    the split+rejoin identity."""
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        *keep,
+        F.posexplode(
+            F.split(F.coalesce(F.col(text_col), F.lit("")), "\\Q" + sep + "\\E")
+        ).alias("idx", "seg"),
+    ).withColumn("shash", F.md5("seg"))
+
+
+def _strip_segments(j: DataFrame, is_boiler, n_col: str, sep: str) -> DataFrame:
+    """Per-doc regroup of :func:`_segments` rows: (doc_id, ``n_col``,
+    n_boiler, boiler_frac, clean_text), where clean_text re-joins the
+    segments not flagged ``is_boiler`` in order, JVM-side (sort_array
+    over (idx, seg) structs)."""
     kept = F.sort_array(
-        F.collect_list(
-            F.when(~is_boiler, F.struct(F.col("pidx"), F.col("para")))
-        )
+        F.collect_list(F.when(~is_boiler, F.struct(F.col("idx"), F.col("seg"))))
     )
     return (
         j.groupBy("doc_id")
         .agg(
-            F.count("*").cast("long").alias("n_paras"),
+            F.count("*").cast("long").alias(n_col),
             F.sum(is_boiler.cast("long")).alias("n_boiler"),
             kept.alias("_kept"),
         )
         .select(
             "doc_id",
-            "n_paras",
+            n_col,
             "n_boiler",
-            F.round(F.col("n_boiler") / F.col("n_paras"), 6).alias("boiler_frac"),
+            F.round(F.col("n_boiler") / F.col(n_col), 6).alias("boiler_frac"),
             F.array_join(
-                F.transform(F.col("_kept"), lambda s: s["para"]), sep
+                F.transform(F.col("_kept"), lambda s: s["seg"]), sep
             ).alias("clean_text"),
         )
     )
@@ -756,6 +769,62 @@ def stratified_sample(
     return df.withColumn("sample_u", F.round(u, 6)).where(u < frac)
 
 
+def _histogram_cutoffs(
+    t: DataFrame, grp: str, v: str, n_bins: int, cutoffs
+) -> tuple[DataFrame, DataFrame]:
+    """The histogram quantile construction behind quality_bins and
+    score_quantiles: a per-``grp`` (lo, hi, n) aggregate broadcast back,
+    ``n_bins`` fixed-width bins over [lo, hi] (a constant group is all
+    bin 0), one map-side-combined histogram aggregation, a cumulative
+    window over the <= ``n_bins`` histogram rows of a group (never over
+    documents), and for each ``(name, q)`` in ``cutoffs`` the smallest
+    bin whose running count reaches ``ceil(n * q)``. Returns
+    ``(binned, edges)``: ``t`` with lo, hi, n and ``bin`` appended, and
+    one row per group with lo, hi, n and one column per cutoff."""
+    stats = t.groupBy(grp).agg(
+        F.min(v).alias("lo"),
+        F.max(v).alias("hi"),
+        F.count("*").cast("long").alias("n"),
+    )
+    width = (F.col("hi") - F.col("lo")) / F.lit(float(n_bins))
+    binned = t.join(F.broadcast(stats), grp).withColumn(
+        "bin",
+        F.when(F.col("hi") == F.col("lo"), F.lit(0))
+        .otherwise(
+            F.least(F.lit(n_bins - 1), F.floor((F.col(v) - F.col("lo")) / width))
+        )
+        .cast("long"),
+    )
+    hist = binned.groupBy(grp, "bin").agg(
+        F.count("*").cast("long").alias("cnt"),
+        F.max("lo").alias("lo"),
+        F.max("hi").alias("hi"),
+        F.max("n").alias("n"),
+    )
+    wcum = Window.partitionBy(grp).orderBy("bin").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    edges = (
+        hist.withColumn("cum", F.sum("cnt").over(wcum))
+        .groupBy(grp)
+        .agg(
+            *[
+                F.min(
+                    F.when(
+                        F.col("cum") >= F.ceil(F.col("n") * F.lit(float(q))),
+                        F.col("bin"),
+                    )
+                ).alias(name)
+                for name, q in cutoffs
+            ],
+            F.max("lo").alias("lo"),
+            F.max("hi").alias("hi"),
+            F.max("n").alias("n"),
+        )
+    )
+    return binned, edges
+
+
 def quality_bins(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -774,11 +843,12 @@ def quality_bins(
 
     Exact per-language tertiles would need a total order per language —
     a single-task sort when one language is most of a web crawl. This
-    uses the scale-safe histogram construction instead: per-language
-    ``n_bins`` fixed-width bins over the score range (one tiny
-    aggregation), a cumulative sum over the ≤ ``n_bins`` histogram rows
-    per language (a window over a vocabulary-sized table, never over
-    documents), and two bin-edge thresholds broadcast back. Cutoffs are
+    uses the scale-safe histogram construction instead
+    (:func:`_histogram_cutoffs`, shared with ``score_quantiles``):
+    per-language ``n_bins`` fixed-width bins over the score range, a
+    cumulative sum over the ≤ ``n_bins`` histogram rows per language
+    (never over documents), and two bin-edge thresholds broadcast back
+    onto the per-document bins. Cutoffs are
     bin-granular — the same granularity CCNet accepts by computing its
     cutoffs on a sample — and every step is deterministic, so the whole
     construction has a bit-exact DuckDB twin.
@@ -797,7 +867,8 @@ def quality_bins(
     MATERIALIZED (doc_id, lang, n_tokens, mean_logprob) table — the LM
     scoring pass then runs exactly once and every downstream branch is
     an aggregation or broadcast join over it (the same
-    contract-vs-materialized split as search vs search_materialized).
+    contract-vs-materialized split as ``navigation.search_relational``
+    vs ``navigation.search_over_sections`` over a stored section table).
     """
     if scored is None:
         scored = unigram_logprob(df, id_col, text_col).join(
@@ -806,47 +877,16 @@ def quality_bins(
             ),
             "doc_id",
         )
-    stats = scored.groupBy("lang").agg(
-        F.min("mean_logprob").alias("lo"),
-        F.max("mean_logprob").alias("hi"),
-        F.count("*").cast("long").alias("n_lang"),
+    binned, edges = _histogram_cutoffs(
+        scored,
+        "lang",
+        "mean_logprob",
+        n_bins,
+        (("tail_edge", tail_frac), ("head_edge", 1.0 - float(head_frac))),
     )
-    s = scored.join(F.broadcast(stats), "lang")
-    width = (F.col("hi") - F.col("lo")) / F.lit(float(n_bins))
-    binned = s.withColumn(
-        "bin",
-        F.when(F.col("hi") == F.col("lo"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(n_bins - 1),
-                F.floor((F.col("mean_logprob") - F.col("lo")) / width),
-            )
-        )
-        .cast("long"),
+    out = binned.join(
+        F.broadcast(edges.select("lang", "tail_edge", "head_edge")), "lang"
     )
-    hist = binned.groupBy("lang", "bin").agg(
-        F.count("*").cast("long").alias("cnt"), F.max("n_lang").alias("n_lang")
-    )
-    wcum = Window.partitionBy("lang").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(wcum))
-    edges = cum.groupBy("lang").agg(
-        F.min(
-            F.when(
-                F.col("cum") >= F.ceil(F.col("n_lang") * F.lit(float(tail_frac))),
-                F.col("bin"),
-            )
-        ).alias("tail_edge"),
-        F.min(
-            F.when(
-                F.col("cum")
-                >= F.ceil(F.col("n_lang") * F.lit(1.0 - float(head_frac))),
-                F.col("bin"),
-            )
-        ).alias("head_edge"),
-    )
-    out = binned.join(F.broadcast(edges), "lang")
     bucket = (
         F.when(F.col("bin") > F.col("head_edge"), F.lit("head"))
         .when(
@@ -998,8 +1038,9 @@ def score_quantiles(
     """Distributed quantile sketch over any numeric column, optionally
     per group — the corpus-statistics primitive behind threshold
     picking (quality cutoffs, length caps, packing budgets). Exact
-    quantiles need a total order; this is the histogram sketch (the
-    same construction as ``quality_bins``): per-group fixed-width bins
+    quantiles need a total order; this is the histogram sketch
+    (:func:`_histogram_cutoffs`, shared with ``quality_bins``):
+    per-group fixed-width bins
     over the value range, a cumulative walk over the ≤ ``n_bins``
     histogram rows, and the quantile reported as its bin's LOWER edge —
     deterministic, error bounded by (max-min)/``n_bins``, and unlike
@@ -1019,47 +1060,8 @@ def score_quantiles(
     t = df.select(
         g.alias("grp"), F.col(value_col).cast("double").alias("v")
     ).where(F.col("v").isNotNull())
-    stats = t.groupBy("grp").agg(
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-        F.count("*").cast("long").alias("n"),
-    )
-    b = t.join(F.broadcast(stats), "grp").withColumn(
-        "bin",
-        F.when(F.col("hi") == F.col("lo"), F.lit(0))
-        .otherwise(
-            F.least(
-                F.lit(n_bins - 1),
-                F.floor(
-                    (F.col("v") - F.col("lo"))
-                    / ((F.col("hi") - F.col("lo")) / F.lit(float(n_bins)))
-                ),
-            )
-        )
-        .cast("long"),
-    )
-    hist = b.groupBy("grp", "bin").agg(
-        F.count("*").cast("long").alias("cnt"),
-        F.max("lo").alias("lo"),
-        F.max("hi").alias("hi"),
-        F.max("n").alias("n"),
-    )
-    wcum = Window.partitionBy("grp").orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = hist.withColumn("cum", F.sum("cnt").over(wcum))
-    edges = cum.groupBy("grp").agg(
-        *[
-            F.min(
-                F.when(
-                    F.col("cum") >= F.ceil(F.col("n") * F.lit(q)), F.col("bin")
-                )
-            ).alias(f"qb_{i}")
-            for i, q in enumerate(qs)
-        ],
-        F.max("lo").alias("lo"),
-        F.max("hi").alias("hi"),
-        F.max("n").alias("n"),
+    _, edges = _histogram_cutoffs(
+        t, "grp", "v", n_bins, [(f"qb_{i}", q) for i, q in enumerate(qs)]
     )
     width = (F.col("hi") - F.col("lo")) / F.lit(float(n_bins))
     pairs = F.explode(
@@ -1500,25 +1502,22 @@ def boilerplate_lines(
     line as a shuffle key; the doc-distinct occurrence count has
     map-side partial aggregation; per-source doc totals are a
     broadcast (sources are few); the count table is corpus-sized so
-    the line re-join is a plain shuffle join; per-doc reassembly is
-    the sort_array regroup shared with paragraph_stats."""
+    the line re-join is a plain shuffle join; the segment explode and
+    the per-doc reassembly are the ones paragraph_stats uses
+    (:func:`_segments`, :func:`_strip_segments`)."""
     if not 0.0 < min_frac <= 1.0:
         raise ValueError(f"min_frac must be in (0, 1] (got {min_frac})")
-    lines = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(source_col).alias("source"),
-        F.posexplode(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
-        ).alias("lidx", "line"),
-    ).withColumn("lhash", F.md5("line"))
+    lines = _segments(
+        df, id_col, text_col, "\n", F.col(source_col).alias("source")
+    )
     src_docs = df.groupBy(F.col(source_col).alias("source")).agg(
         F.count("*").cast("long").alias("n_src_docs")
     )
     counts = (
-        lines.where(F.trim("line") != "")
-        .select("source", "lhash", "doc_id")
+        lines.where(F.trim("seg") != "")
+        .select("source", "shash", "doc_id")
         .distinct()
-        .groupBy("source", "lhash")
+        .groupBy("source", "shash")
         .agg(F.count("*").cast("long").alias("n_docs_with"))
         .join(F.broadcast(src_docs), "source")
         .where(
@@ -1528,34 +1527,11 @@ def boilerplate_lines(
                 >= F.lit(float(min_frac)) * F.col("n_src_docs")
             )
         )
-        .select("source", "lhash", F.lit(True).alias("is_boiler"))
+        .select("source", "shash", F.lit(True).alias("is_boiler"))
     )
-    j = lines.join(counts, ["source", "lhash"], "left").withColumn(
-        "is_boiler", F.coalesce("is_boiler", F.lit(False))
-    )
-    kept = F.sort_array(
-        F.collect_list(
-            F.when(~F.col("is_boiler"), F.struct(F.col("lidx"), F.col("line")))
-        )
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_lines"),
-            F.sum(F.col("is_boiler").cast("long")).alias("n_boiler"),
-            kept.alias("_kept"),
-        )
-        .select(
-            "doc_id",
-            "n_lines",
-            "n_boiler",
-            F.round(F.col("n_boiler") / F.col("n_lines"), 6).alias(
-                "boiler_frac"
-            ),
-            F.array_join(
-                F.transform(F.col("_kept"), lambda s: s["line"]), "\n"
-            ).alias("clean_text"),
-        )
+    j = lines.join(counts, ["source", "shash"], "left")
+    return _strip_segments(
+        j, F.coalesce(F.col("is_boiler"), F.lit(False)), "n_lines", "\n"
     )
 
 

@@ -47,14 +47,29 @@ def shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: i
     map-side stage of every signature pass, and on a low-split input
     (single-row-group parquet) it would otherwise serialize onto one
     scan task."""
-    from . import text_analysis
     from .partitioning import spread
 
     df = spread(df, id_col)
-    grams = text_analysis.word_ngrams(F.split(F.lower(F.col(text_col)), " "), n)
     return df.select(
-        F.col(id_col).alias("doc_id"), F.explode(grams).alias("shingle")
+        F.col(id_col).alias("doc_id"),
+        F.explode(_shingle_grams(F.col(text_col), n)).alias("shingle"),
     )
+
+
+def _shingle_grams(text, n: int = 3):
+    """Shingle array of a text column: word n-grams over the lowercased
+    single-space split (empty below ``n`` tokens). Shared by the batch
+    signatures and ``streaming.streaming_near_dup``."""
+    from . import text_analysis
+
+    return text_analysis.word_ngrams(F.split(F.lower(text), " "), n)
+
+
+def _md5_hash(i: int, shingle):
+    """Hash function ``i`` of the md5 MinHash scheme: the hex
+    ``md5(i || '|' || shingle)``; a signature coordinate is its min over
+    a document's shingles."""
+    return F.md5(F.concat(F.lit(f"{i}|"), shingle))
 
 
 # modulus for the affine derived hashes: 2^31 - 1 (prime). The base
@@ -137,10 +152,7 @@ def minhash_signatures(
     else:
         proj = sh.select(
             "doc_id",
-            *[
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle"))).alias(f"h{i}")
-                for i in range(k)
-            ],
+            *[_md5_hash(i, F.col("shingle")).alias(f"h{i}") for i in range(k)],
         )
     return proj.groupBy("doc_id").agg(
         *[F.min(f"h{i}").alias(f"mh{i}") for i in range(k)]

@@ -113,6 +113,27 @@ def _scrape_json(text: str) -> dict | None:
             return None
 
 
+def _prompt_stage(
+    df: DataFrame, endpoint: str, model: str, schema: str, prompt, reply
+) -> DataFrame:
+    """The batch loop all three stages share: (doc_id, markdown) ->
+    ``schema`` = (doc_id, payload, extractor) in one ``mapInPandas``.
+    ``prompt(md)`` builds a document's prompt; ``reply(resp, md)`` maps
+    the model's reply (None when the endpoint failed) to
+    ``(payload, extractor)``."""
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                (doc_id, *reply(_generate(endpoint, model, prompt(md)), md))
+                for doc_id, md in zip(pdf["doc_id"], pdf["markdown"])
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return df.select("doc_id", "markdown").mapInPandas(kernel, schema=schema)
+
+
 # ---------------------------------------------------------------------------
 # U1: named fields
 
@@ -129,35 +150,21 @@ def extract_fields(
     'unavailable' (endpoint down — deterministic null-fill, mirroring the
     reference fallback)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                prompt = (
-                    "Extract the following fields from the document as JSON "
-                    f"with exactly these keys: {', '.join(fields)}.\n\n"
-                    f"{(md or '')[:8000]}"
-                )
-                resp = _generate(endpoint, model, prompt)
-                got = _scrape_json(resp) if resp is not None else None
-                if got is None:
-                    rows.append(
-                        (doc_id, json.dumps({f: None for f in fields}), "unavailable")
-                    )
-                else:
-                    # null-fill missing fields, reference behavior
-                    rows.append(
-                        (
-                            doc_id,
-                            json.dumps({f: got.get(f) for f in fields}, sort_keys=True),
-                            "llm",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "extracted_fields", "extractor"]
-            )
+    def prompt(md):
+        return (
+            "Extract the following fields from the document as JSON "
+            f"with exactly these keys: {', '.join(fields)}.\n\n"
+            f"{(md or '')[:8000]}"
+        )
 
-    return df.select("doc_id", "markdown").mapInPandas(kernel, schema=LLM_SCHEMA)
+    def reply(resp, md):
+        got = _scrape_json(resp) if resp is not None else None
+        if got is None:
+            return json.dumps({f: None for f in fields}), "unavailable"
+        # null-fill missing fields, reference behavior
+        return json.dumps({f: got.get(f) for f in fields}, sort_keys=True), "llm"
+
+    return _prompt_stage(df, endpoint, model, LLM_SCHEMA, prompt, reply)
 
 
 # ---------------------------------------------------------------------------
@@ -223,36 +230,18 @@ def extract_with_schema(
     props = list((json_schema.get("properties") or {}).keys())
     ddl = ddl_from_json_schema(json_schema)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                resp = _generate(endpoint, model, _schema_prompt(md, schema_str))
-                if resp is None:
-                    rows.append(
-                        (doc_id, json.dumps({k: None for k in props}), "unavailable")
-                    )
-                    continue
-                got = _scrape_json(resp)
-                if got is None:
-                    rows.append(
-                        (doc_id, json.dumps({k: None for k in props}), "parse_error")
-                    )
-                else:
-                    rows.append(
-                        (
-                            doc_id,
-                            json.dumps(
-                                {k: got.get(k) for k in props}, sort_keys=True
-                            ),
-                            "llm",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "extracted_json", "extractor"]
-            )
+    def reply(resp, md):
+        if resp is None:
+            return json.dumps({k: None for k in props}), "unavailable"
+        got = _scrape_json(resp)
+        if got is None:
+            return json.dumps({k: None for k in props}), "parse_error"
+        return json.dumps({k: got.get(k) for k in props}, sort_keys=True), "llm"
 
-    out = df.select("doc_id", "markdown").mapInPandas(kernel, schema=SCHEMA_OUT)
+    out = _prompt_stage(
+        df, endpoint, model, SCHEMA_OUT,
+        lambda md: _schema_prompt(md, schema_str), reply,
+    )
     return out.withColumn("data", F.from_json("extracted_json", ddl)).withColumn(
         "valid", F.col("data").isNotNull() & (F.col("extractor") == "llm")
     )
@@ -288,25 +277,19 @@ def extract_document_json(
     ``fallback_parser``."""
     from docstrange_spark.kernels import mdjson
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, md in zip(pdf["doc_id"], pdf["markdown"]):
-                resp = _generate(endpoint, model, _document_prompt(md or ""))
-                got = _scrape_json(resp) if resp is not None else None
-                if got is None:
-                    doc = mdjson.parse_markdown(md or "")
-                    rows.append(
-                        (doc_id, json.dumps(doc, sort_keys=True), "fallback_parser")
-                    )
-                    continue
-                if "document" not in got:
-                    got = {"document": got}
-                rows.append((doc_id, json.dumps(got, sort_keys=True), "llm"))
-            yield pd.DataFrame(rows, columns=["doc_id", "document_json", "extractor"])
+    def reply(resp, md):
+        got = _scrape_json(resp) if resp is not None else None
+        if got is None:
+            doc = mdjson.parse_markdown(md or "")
+            return json.dumps(doc, sort_keys=True), "fallback_parser"
+        if "document" not in got:
+            got = {"document": got}
+        return json.dumps(got, sort_keys=True), "llm"
 
-    return df.select("doc_id", "markdown").mapInPandas(
-        kernel, schema="doc_id string, document_json string, extractor string"
+    return _prompt_stage(
+        df, endpoint, model,
+        "doc_id string, document_json string, extractor string",
+        _document_prompt, reply,
     )
 
 

@@ -295,11 +295,12 @@ def passage_corpus(docs: DataFrame) -> DataFrame:
     Scale shape: one extraction kernel pass plus the zero-join section
     split; the passage table is a projection of it (materialize it once
     in production, like ``search_materialized``'s section store). The
-    result is localCheckpoint-ed here: BM25 references its corpus
-    several times (lengths, totals, postings), and since the round-6
-    section split is exchange-free there is no ReusedExchange node left
-    to deduplicate the extraction-kernel subtree — uncheckpointed, the
-    kernel would re-execute once per reference.
+    result is localCheckpoint-ed here: BM25 reads its corpus twice
+    (the per-document projection and the 1-row aggregate), and since
+    the round-6 section split is exchange-free there is no
+    ReusedExchange node left to deduplicate the extraction-kernel
+    subtree — uncheckpointed, the kernel would re-execute once per
+    read.
     """
     from . import extract as ex
     from . import navigation, spanize

@@ -32,8 +32,7 @@ def _tokens(text_col: str):
     # NULL text tokenizes as empty, not as NULL: split(NULL) would
     # propagate to size() = -1 (legacy sizeOfNull) and poison every
     # downstream count (repetition n_words, pack_batches running sums)
-    # where the DuckDB twins and the streaming signature UDF treat the
-    # row as an empty document
+    # where the DuckDB twins treat the row as an empty document
     return F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), " ")
 
 
@@ -345,26 +344,27 @@ def repetition_stats(
         F.col(id_col).alias("doc_id"), nonempty_tokens(text_col).alias("toks")
     )
     g = t.select("doc_id", "toks", bigrams("toks").alias("grams"))
-    n_g = F.size("grams")
-
-    def _fracs(col: str, n_col, prefix: str):
-        dup = (n_col - F.size(F.array_distinct(col))) / n_col
-        top = _mode_count(F.col(col)) / n_col
-        zero = F.lit(0.0)
-        return [
-            F.round(F.when(n_col > 0, dup).otherwise(zero), 6).alias(
-                f"dup_{prefix}_frac"
-            ),
-            F.round(F.when(n_col > 0, top).otherwise(zero), 6).alias(
-                f"top_{prefix}_frac"
-            ),
-        ]
-
     return g.select(
         "doc_id",
         F.size("toks").cast("long").alias("n_words"),
-        *_fracs("toks", F.size("toks"), "word"),
-        *_fracs("grams", n_g, "2gram"),
+        *_repetition_fracs("toks", "word"),
+        *_repetition_fracs("grams", "2gram"),
+    )
+
+
+def _repetition_fracs(col: str, prefix: str):
+    """``(dup_<prefix>_frac, top_<prefix>_frac)`` over the array column
+    ``col``: duplicate occurrences / occurrences and most-frequent
+    element count / occurrences, rounded to 6 dp, 0.0 on an empty
+    array. The one definition repetition_stats reports and
+    fineweb_filters thresholds."""
+    n = F.size(col)
+    dup = (n - F.size(F.array_distinct(col))) / n
+    top = _mode_count(F.col(col)) / n
+    zero = F.lit(0.0)
+    return (
+        F.round(F.when(n > 0, dup).otherwise(zero), 6).alias(f"dup_{prefix}_frac"),
+        F.round(F.when(n > 0, top).otherwise(zero), 6).alias(f"top_{prefix}_frac"),
     )
 
 
@@ -386,7 +386,8 @@ def fineweb_filters(
     so a user gets one keep/drop decision with the failed-rule list.
 
     One wide projection over the scan — every signal is an array fold
-    over the token array (shared extractors with ``repetition_stats``),
+    over the token array (the repetition fractions are
+    ``repetition_stats``' own expressions),
     zero shuffles, zero Python, so the chain composes into any corpus
     build without adding an exchange. Decisions compare the ROUNDED
     signal (6 dp) against the threshold so the DuckDB twin reaches
@@ -399,7 +400,6 @@ def fineweb_filters(
     )
     g = t.select("doc_id", "toks", bigrams("toks").alias("grams"))
     n = F.size("toks")
-    n_g = F.size("grams")
     mwl = F.round(
         F.when(
             n > 0,
@@ -410,20 +410,14 @@ def fineweb_filters(
         ).otherwise(F.lit(0.0)),
         6,
     )
-    dup2 = F.round(
-        F.when(n_g > 0, (n_g - F.size(F.array_distinct("grams"))) / n_g)
-        .otherwise(F.lit(0.0)),
-        6,
-    )
-    topw = F.round(
-        F.when(n > 0, _mode_count(F.col("toks")) / n).otherwise(F.lit(0.0)), 6
-    )
+    dup_2gram, _ = _repetition_fracs("grams", "2gram")
+    _, top_word = _repetition_fracs("toks", "word")
     sig = g.select(
         "doc_id",
         n.cast("long").alias("n_words"),
         mwl.alias("mean_word_len"),
-        dup2.alias("dup_2gram_frac"),
-        topw.alias("top_word_frac"),
+        dup_2gram,
+        top_word,
     )
     checks = [
         (F.col("n_words") < min_words, "too_few_words"),
@@ -795,6 +789,44 @@ def bpe_pair_counts(
 BPE_SEP = "\x1f"
 
 
+def _bpe_pieces(text_col: str):
+    """Pre-tokenizer pieces of bpe_train and bpe_encode: lowercased
+    :data:`BPE_PIECE_RE` matches, with :data:`BPE_SEP` stripped first so
+    no piece can forge a symbol boundary."""
+    return F.regexp_extract_all(
+        F.replace(
+            F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+            F.lit(BPE_SEP),
+            F.lit(""),
+        ),
+        F.lit(BPE_PIECE_RE),
+        0,
+    )
+
+
+def _bpe_symbols(piece):
+    """A piece's single-character symbols in the boundary encoding
+    ``␟s1␟␟s2␟ ... ␟sn␟`` (see :func:`bpe_train`)."""
+    S = BPE_SEP
+    # "␟␟a␟␟b" -> drop first sep, append one: "␟a␟␟b␟"
+    inner = F.regexp_replace(piece, "(?s)(.)", S + S + "$1")
+    return F.concat(F.substr(inner, F.lit(2), F.length(inner)), F.lit(S))
+
+
+def _bpe_merge(rep, left: str, right: str):
+    """Apply one merge to an encoded piece: every ``left right`` symbol
+    pair becomes the symbol ``left+right``, greedy left to right."""
+    S = BPE_SEP
+    return F.replace(
+        rep, F.lit(S + left + S + S + right + S), F.lit(S + left + right + S)
+    )
+
+
+def _bpe_split(rep):
+    """Symbol array of an encoded piece."""
+    return F.split(F.substr(rep, F.lit(2), F.length(rep) - 2), BPE_SEP + BPE_SEP)
+
+
 def bpe_train(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -828,32 +860,12 @@ def bpe_train(
     collect() smell). Lineage stacks one ``replace`` per merge;
     production runs at thousands of merges would localCheckpoint the
     piece table every ~50 iterations (same pattern as
-    dedup.cluster_assignments' pointer-jumping loop)."""
+    dedup.connected_components' pointer-jumping loop)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1 (got {n_merges})")
-    S = BPE_SEP
-    pieces = df.select(
-        F.explode(
-            F.regexp_extract_all(
-                F.replace(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    F.lit(S),
-                    F.lit(""),
-                ),
-                F.lit(BPE_PIECE_RE),
-                0,
-            )
-        ).alias("piece")
-    )
+    pieces = df.select(F.explode(_bpe_pieces(text_col)).alias("piece"))
     pc = pieces.groupBy("piece").agg(F.count("*").cast("long").alias("cnt"))
-    # "␟␟a␟␟b" -> drop first sep, append one: "␟a␟␟b␟"
-    inner = F.regexp_replace("piece", "(?s)(.)", S + S + "$1")
-    rep_df = pc.select(
-        "cnt",
-        F.concat(
-            F.substr(inner, F.lit(2), F.length(inner)), F.lit(S)
-        ).alias("rep"),
-    )
+    rep_df = pc.select("cnt", _bpe_symbols(F.col("piece")).alias("rep"))
 
     def adjacent_pairs(syms):
         return F.when(
@@ -867,7 +879,7 @@ def bpe_train(
             ),
         ).otherwise(F.array().cast("array<struct<l:string,r:string>>"))
 
-    syms = F.split(F.substr(F.col("rep"), F.lit(2), F.length("rep") - 2), S + S)
+    syms = _bpe_split(F.col("rep"))
     merges = []
     for t in range(1, n_merges + 1):
         pairs = (
@@ -884,14 +896,7 @@ def bpe_train(
             break
         l, r, c = best[0]["l"], best[0]["r"], best[0]["c"]
         merges.append((t, l, r, c, l + r))
-        rep_df = rep_df.withColumn(
-            "rep",
-            F.replace(
-                F.col("rep"),
-                F.lit(S + l + S + S + r + S),
-                F.lit(S + l + r + S),
-            ),
-        )
+        rep_df = rep_df.withColumn("rep", _bpe_merge(F.col("rep"), l, r))
     return df.sparkSession.createDataFrame(
         merges,
         "rank long, left_sym string, right_sym string, "
@@ -997,7 +1002,6 @@ def bpe_encode(
     table on the piece key (plain shuffle join, both sides corpus-
     shaped but narrow); everything after the pre-tokenizer explode is
     whole-stage codegen."""
-    S = BPE_SEP
     if merges is None:
         merges = [
             (r["left_sym"], r["right_sym"])
@@ -1007,30 +1011,17 @@ def bpe_encode(
         ]
     dpieces = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(
-                F.replace(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    F.lit(S),
-                    F.lit(""),
-                ),
-                F.lit(BPE_PIECE_RE),
-                0,
-            )
-        ).alias("piece"),
+        F.explode(_bpe_pieces(text_col)).alias("piece"),
     )
     dpc = dpieces.groupBy("doc_id", "piece").agg(
         F.count("*").cast("long").alias("k")
     )
-    inner = F.regexp_replace("piece", "(?s)(.)", S + S + "$1")
-    rep = F.concat(F.substr(inner, F.lit(2), F.length(inner)), F.lit(S))
+    rep = _bpe_symbols(F.col("piece"))
     for l, r in merges:
-        rep = F.replace(rep, F.lit(S + l + S + S + r + S), F.lit(S + l + r + S))
+        rep = _bpe_merge(rep, l, r)
     nsym = dpieces.select("piece").distinct().select(
         "piece",
-        F.size(
-            F.split(F.substr(rep, F.lit(2), F.length(rep) - 2), S + S)
-        ).cast("long").alias("n_sym"),
+        F.size(_bpe_split(rep)).cast("long").alias("n_sym"),
         F.length("piece").cast("long").alias("p_chars"),
     )
     return (

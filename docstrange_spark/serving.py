@@ -299,8 +299,11 @@ class DocServer:
                 return {"error": f"chunk_index {idx} out of range "
                                  f"(0..{len(chunks) - 1})"}
             c = chunks[idx]
-            lines = doc["markdown"].split("\n")
-            content = "\n".join(lines[c["start_index"]: c["end_index"] + 1])
+            # start/end index the section list, not markdown lines
+            content = "\n".join(
+                s["content"]
+                for s in doc["sections"][c["start_index"]: c["end_index"] + 1]
+            )
             return {"chunk_index": idx, "token_count": c["token_count"],
                     "titles": c["titles"], "content": content}
         raise ValueError(f"unknown tool {name!r}")
@@ -309,20 +312,13 @@ class DocServer:
         secs = doc["sections"]
         counts = [s["token_count"] for s in secs] or [0]
         total = doc["total_tokens"]
-        # N7 thresholds (recommendation_col / reference server.py:307-337)
-        rec = (
-            "full_document" if total < 8000
-            else "full_document_or_chunked" if total < 32000
-            else "chunked_processing" if total < 128000
-            else "hierarchical_navigation"
-        )
         return {
             "doc_id": doc["doc_id"],
             "n_sections": len(secs),
             "total_tokens": total,
             "min_tokens": min(counts),
             "max_tokens": max(counts),
-            "recommendation": rec,
+            "recommendation": sections.processing_recommendation(total),
         }
 
     # -- JSON-RPC / MCP ----------------------------------------------------

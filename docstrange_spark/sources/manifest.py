@@ -40,16 +40,21 @@ MANIFEST_SCHEMA = (
 
 
 def snapshot_id_of(path: str) -> str:
-    """Deterministic input-snapshot fingerprint for a parquet dir (file
-    names + sizes + mtimes — the parquet stand-in for an Iceberg
-    snapshot id)."""
+    """Deterministic input-snapshot fingerprint for a parquet dir or a
+    single parquet file (file names + sizes + mtimes — the parquet
+    stand-in for an Iceberg snapshot id). The mtime is what tells a
+    same-name, same-size rewrite apart from the original."""
+    if os.path.isfile(path):
+        walk = [(os.path.dirname(path), [], [os.path.basename(path)])]
+    else:
+        walk = os.walk(path)
     entries = []
-    for root, _, files in os.walk(path):
+    for root, _, files in walk:
         for f in sorted(files):
             if f.startswith(("_", ".")):
                 continue
             st = os.stat(os.path.join(root, f))
-            entries.append(f"{f}:{st.st_size}")
+            entries.append(f"{f}:{st.st_size}:{st.st_mtime_ns}")
     import hashlib
 
     return hashlib.md5("|".join(entries).encode()).hexdigest()

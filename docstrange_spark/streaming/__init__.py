@@ -163,42 +163,6 @@ def run_to_parquet(
 # streaming near-duplicate detection: stateful LSH buckets
 
 
-def _doc_signature_udf(k: int):
-    """Scalar pandas UDF computing a document's MinHash signature
-    MAP-SIDE from its text alone (no streaming aggregation — the batch
-    operator's groupBy(doc_id) is not available in append mode). The
-    arithmetic is identical to dedup.minhash_signatures(scheme='md5'):
-    min over md5(f"{i}|{shingle}") hex per hash function; docs with no
-    3-gram shingles yield null, mirroring the batch operator emitting
-    no signature row for them."""
-    import hashlib
-
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them and pandas_udf's hint inference can't resolve 'pd.Series'
-    @pandas_udf("array<string>")
-    def sig(texts):
-        out = []
-        for t in texts.fillna(""):
-            toks = t.lower().split(" ")
-            if len(toks) < 3:
-                out.append(None)
-                continue
-            shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-            out.append([
-                min(
-                    hashlib.md5(f"{i}|{s}".encode()).hexdigest()
-                    for s in shingles
-                )
-                for i in range(k)
-            ])
-        return pd.Series(out)
-
-    return sig
-
-
 def streaming_near_dup(
     docs: DataFrame,
     k: int = 8,
@@ -207,7 +171,9 @@ def streaming_near_dup(
 ) -> DataFrame:
     """Custom stateful operator: near-duplicate candidate pairs over a
     document STREAM. Each micro-batch's documents are signed map-side
-    (``_doc_signature_udf``) and banded; per (band, band_hash) key,
+    with the batch md5-scheme MinHash (``dedup._shingle_grams`` and
+    ``dedup._md5_hash``, min per coordinate via ``array_min``) and
+    banded by ``dedup.lsh_bands``, all JVM-side; per (band, band_hash) key,
     ``applyInPandasWithState`` keeps the bucket's member ids as state
     and emits a pair for every (existing member, new member) collision
     plus all within-batch pairs — over an entire drain this reproduces
@@ -226,25 +192,29 @@ def streaming_near_dup(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    r = k // bands
-    sig = _doc_signature_udf(k)(F.col("text"))
-    entries = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.element_at("mh", b * r + j + 1) for j in range(r)]
-                )
-            ).alias("band_hash"),
+    from docstrange_spark.operators import dedup, text_analysis
+
+    # md5-scheme MinHash per row, JVM-side: the batch operator's shingles
+    # and per-shingle hash with array_min in place of its groupBy min
+    # (append mode has no aggregation); a document under 3 tokens has no
+    # shingles and, as in the batch operator, no signature
+    def signature(grams):
+        return F.array(*[
+            F.array_min(F.transform(grams, lambda s: dedup._md5_hash(i, s)))
+            for i in range(k)
+        ])
+
+    toks = F.split(F.lower(F.col("text")), " ")
+    sigs = (
+        docs.where(F.size(toks) >= 3)
+        .select(
+            "doc_id",
+            text_analysis.bind(dedup._shingle_grams(F.col("text")), signature)
+            .alias("mh"),
         )
-        for b in range(bands)
-    ])
-    banded = (
-        docs.select("doc_id", sig.alias("mh"))
-        .where(F.col("mh").isNotNull())
-        .select("doc_id", F.explode(entries).alias("bh"))
-        .select("doc_id", F.col("bh.band").alias("band"), F.col("bh.band_hash").alias("band_hash"))
+        .select("doc_id", *[F.col("mh")[i].alias(f"mh{i}") for i in range(k)])
     )
+    banded = dedup.lsh_bands(sigs, bands, k)
 
     def bucket_fn(key, pdfs, state):
         members: list[int] = list(state.get[0]) if state.exists else []

@@ -90,6 +90,50 @@ def test_build_corpus_config_change_invalidates(spark, tmp_path, docs_path):
     assert packed.where(F.col("batch_id") > 0).count() > 0
 
 
+def test_snapshot_id_sees_same_size_rewrite(spark, tmp_path, docs_path):
+    """Rewriting a part file in place at equal size (same name, same
+    size, later mtime) is a new input snapshot: the id changes and a
+    rerun recomputes the extract stage instead of reusing it."""
+    from docstrange_spark.sources import manifest
+
+    src = str(tmp_path / "src")
+    spark.read.parquet(docs_path).coalesce(1).write.parquet(src)
+    part = next(
+        os.path.join(src, f) for f in os.listdir(src) if f.endswith(".parquet")
+    )
+    out = str(tmp_path / "out")
+    first = corpus.build_corpus(spark, src, out, stop_after="extract")
+    assert first["snapshot_id"] == manifest.snapshot_id_of(src)
+    st = os.stat(part)
+    with open(part, "rb") as f:
+        data = f.read()
+    with open(part, "wb") as f:
+        f.write(data)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert os.stat(part).st_size == st.st_size
+    assert manifest.snapshot_id_of(src) != first["snapshot_id"]
+    again = corpus.build_corpus(spark, src, out, stop_after="extract")
+    assert again["stages"] == {"extract": "ran"}
+
+
+def test_snapshot_id_of_single_file(tmp_path, docs_path):
+    """A single-file input is fingerprinted as itself, not as an empty
+    directory walk: the id differs from the empty input's and follows
+    the file's mtime."""
+    from docstrange_spark.sources import manifest
+
+    empty = str(tmp_path / "empty")
+    os.makedirs(empty)
+    f = str(tmp_path / "docs.parquet")
+    with open(docs_path, "rb") as src, open(f, "wb") as dst:
+        dst.write(src.read())
+    first = manifest.snapshot_id_of(f)
+    assert first != manifest.snapshot_id_of(empty)
+    st = os.stat(f)
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert manifest.snapshot_id_of(f) != first
+
+
 def test_build_corpus_rejects_unknown_stage(spark, tmp_path, docs_path):
     with pytest.raises(ValueError):
         corpus.build_corpus(spark, docs_path, str(tmp_path / "x"), stop_after="nope")

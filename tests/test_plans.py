@@ -262,3 +262,32 @@ def test_no_split_inside_lambda(docs, name):
     assert plans.lambda_splits(df) == 0, [
         b for b in plans.lambda_bodies(df) if "split(" in b
     ]
+
+
+def test_streaming_near_dup_signatures_run_jvm_side(spark, tmp_path):
+    """streaming_near_dup signs and bands documents with built-in
+    expressions only: in the executed micro-batch plan the
+    applyInPandasWithState bucket-state function is the single Python
+    stage, with no Python UDF evaluation feeding it."""
+    from docstrange_spark.streaming import streaming_near_dup
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c d")], "doc_id long, text string"
+    ).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    q = (
+        streaming_near_dup(stream)
+        .writeStream.format("memory")
+        .queryName("near_dup_plan")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.explainInternal(False)
+    assert spark.table("near_dup_plan").count() == 4  # (1, 2) once per band
+    assert "FlatMapGroupsInPandasWithState" in plan, plan
+    python_stages = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                     "MapInArrow", "FlatMapGroupsInPandas")
+    assert sum(plan.count(t) for t in python_stages) == 1, plan

@@ -7,6 +7,7 @@ import json
 import pytest
 
 from docstrange_spark import datagen
+from docstrange_spark.kernels import sections
 from docstrange_spark.serving import TOOLS, DocServer
 
 
@@ -222,6 +223,25 @@ def test_chunks_roundtrip(server, corpus):
         "chunk_index": 99, "max_tokens": 20,
     })
     assert "error" in oob
+
+
+def test_chunk_content_is_the_chunks_sections(server, corpus):
+    """A chunk's start/end index its SECTIONS: the content is those
+    sections' markdown lines, from the first one's header line to the
+    last one's end line, even when sections span several lines."""
+    args = {"corpus_path": corpus, "doc_id": DOC}
+    md = _call(server, "get_full_content", args)["markdown"]
+    secs = sections.split_sections(md)
+    assert any(s["end_line"] > s["start_line"] for s in secs)
+    chunks = sections.chunk_sections(secs, 20)
+    assert len(chunks) > 1
+    lines = md.split("\n")
+    for i, c in enumerate(chunks):
+        got = _call(server, "get_chunk_content",
+                    {**args, "chunk_index": i, "max_tokens": 20})
+        first, last = secs[c["start_index"]], secs[c["end_index"]]
+        assert got["content"] == "\n".join(
+            lines[first["start_line"]: last["end_line"] + 1])
 
 
 def test_documents_style_corpus_and_missing_doc(server):
