@@ -117,7 +117,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--combine", action="store_true",
                     help="single combined document (reference multi-file mode)")
     ap.add_argument("--resume", action="store_true",
-                    help="manifest-checkpointed processing, skip committed buckets")
+                    help="checkpointed processing: skip the buckets already "
+                         "committed for this input and output format")
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--extract-fields", nargs="+", default=None,
                     help="extract named fields as JSON (reference --extract-fields)")
@@ -281,6 +282,7 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             lambda df: ex.extract(df, formats=fmts),
             snapshot_id=snap,
+            config={"formats": fmts, "spanize": args.spanize},
         )
         print(json.dumps(summary))
         return 0

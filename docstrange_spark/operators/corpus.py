@@ -11,12 +11,14 @@ Two layers:
   what the contract query runs and what the DuckDB full-chain oracle
   verifies bit-for-bit.
 - :func:`build_corpus` — the materialized, resumable job: each stage
-  writes parquet under ``out_dir/<stage>/`` and then commits a stage
-  manifest (JSON marker with run lineage: input snapshot id, config
-  fingerprint, row count, wall-clock). A rerun after a kill skips every
-  stage whose manifest matches the current (snapshot, config) and
-  resumes mid-chain; kernels are deterministic, so resumed output is
-  identical to a single uninterrupted run.
+  writes parquet under ``out_dir/<stage>/`` and commits a record (run
+  lineage: input snapshot id, config fingerprint, row count observed on
+  the write, wall-clock) through ``sources.manifest``, the one commit
+  protocol this job shares with the CLI's bucket-level ``--resume``. A
+  rerun after a kill skips every stage whose record matches the
+  current (snapshot, config) and resumes mid-chain; kernels are
+  deterministic, so resumed output is identical to a single
+  uninterrupted run.
 
 Scale notes: every stage is the already-scale-shaped operator it
 composes (salted extraction, bucketed LSH + exact-Jaccard verify,
@@ -25,16 +27,13 @@ packing windows). Materializing between stages is what a 100 TB run
 wants anyway — each stage's output is the natural checkpoint, and the
 dedup stage (the expensive one) is never recomputed when a later stage
 fails. On a real cluster the parquet stage dirs ride Iceberg tables and
-the JSON markers ride the table's snapshot metadata; the interface is
-identical (see sources/manifest.py for the bucket-level analogue used
-inside the extract stage's CLI path).
+the commit records ride the table's snapshot metadata; the interface is
+identical.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -273,88 +272,6 @@ def corpus_plan(docs: DataFrame, **overrides) -> DataFrame:
 # materialized, resumable job
 
 
-def _config_fingerprint(cfg: dict) -> str:
-    import hashlib
-
-    return hashlib.md5(
-        json.dumps(cfg, sort_keys=True, default=str).encode()
-    ).hexdigest()
-
-
-def _marker_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, f"_STAGE_{stage}.json")
-
-
-def _sentinel_path(out_dir: str, stage: str) -> str:
-    """Patch-in-flight sentinel (``update_corpus``): committed
-    atomically BEFORE the stage's data swap begins, cleared by
-    ``_commit_stage`` AFTER the new marker is durable. While present,
-    the stage's data may be old, new, or mid-swap — never trust it."""
-    return os.path.join(out_dir, f"_PATCHING_{stage}.json")
-
-
-def _stage_done(out_dir: str, stage: str, snapshot_id: str, config_fp: str) -> bool:
-    # a pending-patch sentinel means a swap was in flight when the
-    # process died: the marker (old or new) no longer vouches for the
-    # data underneath — treat as not done so the stage fully reruns
-    if os.path.exists(_sentinel_path(out_dir, stage)):
-        return False
-    # a marker with no data directory (kill between a patch's rmtree
-    # and rename, pre-sentinel legacy layout) is equally not done
-    if not os.path.isdir(os.path.join(out_dir, stage)):
-        return False
-    p = _marker_path(out_dir, stage)
-    if not os.path.isfile(p):
-        return False
-    try:
-        with open(p) as f:
-            m = json.load(f)
-    except (json.JSONDecodeError, OSError):
-        # a torn/unreadable marker (kill mid-commit before the rename
-        # made it durable, disk hiccup) means NOT committed — the stage
-        # reruns, which is always safe (writes are overwrite-idempotent)
-        return False
-    return m.get("snapshot_id") == snapshot_id and m.get("config_fp") == config_fp
-
-
-def _commit_stage(
-    out_dir: str,
-    stage: str,
-    run_id: str,
-    snapshot_id: str,
-    config_fp: str,
-    n_rows: int,
-    wall_ms: int,
-) -> None:
-    rec = {
-        "stage": stage,
-        "run_id": run_id,
-        "snapshot_id": snapshot_id,
-        "config_fp": config_fp,
-        "n_rows": n_rows,
-        "wall_ms": wall_ms,
-        "committed_at_ms": int(time.time() * 1000),
-    }
-    # marker write AFTER the data parquet is durable = the commit
-    # point, and the marker itself commits atomically (temp file +
-    # rename) so a kill mid-write can never leave a torn marker that
-    # breaks the NEXT resume; the jsonl log keeps full lineage history
-    p = _marker_path(out_dir, stage)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rec, f, indent=2)
-    os.replace(tmp, p)
-    # clear any patch-in-flight sentinel ONLY after the new marker is
-    # durable: a kill between marker and sentinel removal leaves the
-    # stage conservatively 'not done' (it reruns — wasteful but safe);
-    # the reverse order would let an old marker vouch for patched data
-    sent = _sentinel_path(out_dir, stage)
-    if os.path.exists(sent):
-        os.remove(sent)
-    with open(os.path.join(out_dir, "manifest.jsonl"), "a") as f:
-        f.write(json.dumps(rec) + "\n")
-
-
 def build_corpus(
     spark: SparkSession,
     input_path: str,
@@ -364,14 +281,16 @@ def build_corpus(
 ) -> dict:
     """Run the corpus chain stage-by-stage with durable checkpoints.
 
-    Each stage writes ``out_dir/<stage>/`` (parquet) and then a
+    Each stage writes ``out_dir/<stage>/`` (parquet) and commits its
+    record through ``sources.manifest.write_committed``: a
     ``_STAGE_<stage>.json`` marker carrying (run_id, input snapshot_id,
-    config fingerprint, rows, wall). On rerun, stages whose marker
-    matches the current snapshot+config are SKIPPED and their parquet
-    output is read back — a job killed after the dedup stage resumes at
-    selection without recomputing extraction or LSH. A changed input or
-    config invalidates every stage (fingerprint mismatch), never
-    silently reuses stale data.
+    config fingerprint, rows, wall, schema), with the row count observed
+    on the write itself. On rerun, stages whose marker matches the
+    current snapshot+config are SKIPPED and their parquet output is read
+    back with the recorded schema — a job killed after the dedup stage
+    resumes at selection without recomputing extraction or LSH. A
+    changed input or config invalidates every stage (fingerprint
+    mismatch), never silently reuses stale data.
 
     ``stop_after`` ends the run after the named stage commits (the test
     hook standing in for a mid-chain kill). Returns a summary dict with
@@ -388,24 +307,20 @@ def build_corpus(
     allowed = STAGES[:1] + (("clean",) if clean_on else ()) + STAGES[1:]
     if stop_after is not None and stop_after not in allowed:
         raise ValueError(f"stop_after must be one of {allowed} (got {stop_after!r})")
-    snapshot_id = mf.snapshot_id_of(input_path)
-    config_fp = _config_fingerprint(cfg)
-    run_id = uuid.uuid4().hex[:12]
+    lineage = {
+        "run_id": uuid.uuid4().hex[:12],
+        "snapshot_id": mf.snapshot_id_of(input_path),
+        "config_fp": mf.config_fingerprint(cfg),
+    }
     os.makedirs(out_dir, exist_ok=True)
     status: dict[str, str] = {}
 
     def run_stage(stage: str, make: "callable") -> DataFrame:
-        path = os.path.join(out_dir, stage)
-        if _stage_done(out_dir, stage, snapshot_id, config_fp):
+        rec = mf.committed(out_dir, stage, lineage)
+        if rec is not None:
             status[stage] = "skipped"
-            return spark.read.parquet(path)
-        t0 = time.time()
-        make().write.mode("overwrite").parquet(path)
-        out = spark.read.parquet(path)
-        _commit_stage(
-            out_dir, stage, run_id, snapshot_id, config_fp,
-            out.count(), int((time.time() - t0) * 1000),
-        )
+            return mf.read_committed(spark, out_dir, rec)
+        out = mf.write_committed(make(), out_dir, stage, lineage)
         status[stage] = "ran"
         return out
 
@@ -448,9 +363,7 @@ def build_corpus(
         run_stage("pack", lambda: _pack_stage(selected, cfg["budget"], cfg["n_shards"]))
 
     return {
-        "run_id": run_id,
-        "snapshot_id": snapshot_id,
-        "config_fp": config_fp,
+        **lineage,
         "stages": status,
         "out_dir": out_dir,
         # None until the pack stage has actually committed (a
@@ -481,42 +394,42 @@ def update_corpus(
     pass can additionally ride ``dedup.incremental_candidate_pairs``
     against a persisted band index when maintained separately).
 
-    The patch is a single logical transition guarded by a sentinel:
-    the new parquet lands in a temp dir, a ``_PATCHING_extract.json``
-    sentinel commits atomically, THEN the directory swap happens, THEN
-    the new marker commits (which clears the sentinel). A kill anywhere
-    between sentinel and marker leaves the sentinel in place, and
-    ``_stage_done`` treats a sentinel (or a missing data dir) as NOT
-    done — so a retry can never pass the stage guard against mid-swap
-    or already-patched data (which would double-apply the delta); it
-    falls back to a full re-extract instead. (Directory rename plus
-    sentinel is the local-FS stand-in for an Iceberg snapshot commit.)
+    The patch is a single logical transition guarded by a sentinel
+    (``sources.manifest.write_committed(patch=...)``): the new parquet
+    lands in a temp dir, a ``_PATCHING_extract.json`` sentinel commits
+    atomically, THEN the directory swap happens, THEN the new marker
+    commits (which clears the sentinel). A kill anywhere between
+    sentinel and marker leaves the sentinel in place, and
+    ``manifest.committed`` treats a sentinel (or a missing data dir) as
+    NOT done — so a retry can never pass the stage guard against
+    mid-swap or already-patched data (which would double-apply the
+    delta); it falls back to a full re-extract instead. (Directory
+    rename plus sentinel is the local-FS stand-in for an Iceberg
+    snapshot commit.)
 
     The invariant (pinned by test): ``update_corpus(old, new)`` output
     is IDENTICAL to ``build_corpus(new)`` from scratch.
     """
-    import shutil
-
     from docstrange_spark.sources import manifest as mf
 
     cfg = {**DEFAULTS, **overrides}
-    config_fp = _config_fingerprint(cfg)
+    config_fp = mf.config_fingerprint(cfg)
     old_snapshot = mf.snapshot_id_of(old_input)
-    if os.path.exists(_sentinel_path(out_dir, "extract")):
+    if mf.abandon_patch(out_dir, "extract"):
         # a previous update died mid-swap: the extract data under the
         # marker is untrustworthy (old, new, or missing). Recover by
         # rebuilding from the NEW snapshot from scratch — build_corpus
-        # sees the sentinel via _stage_done, reruns extract fully, and
-        # its _commit_stage clears the sentinel. Output still equals
-        # build_corpus(new) — the pinned invariant — just without the
-        # incremental saving this once.
-        shutil.rmtree(
-            os.path.join(out_dir, "extract__patch"), ignore_errors=True
-        )
+        # sees the sentinel, reruns extract fully, and its commit clears
+        # the sentinel. Output still equals build_corpus(new) — the
+        # pinned invariant — just without the incremental saving this
+        # once.
         summary = build_corpus(spark, new_input, out_dir, **overrides)
         summary["extract_patch"] = {"recovered_from_torn_patch": True}
         return summary
-    if not _stage_done(out_dir, "extract", old_snapshot, config_fp):
+    old_rec = mf.committed(
+        out_dir, "extract", {"snapshot_id": old_snapshot, "config_fp": config_fp}
+    )
+    if old_rec is None:
         raise ValueError(
             "update_corpus needs a committed extract stage for the OLD "
             "snapshot and the SAME config — run build_corpus(old_input) "
@@ -544,39 +457,22 @@ def update_corpus(
     drop_keys = delta.where(
         F.col("status").isin("removed", "changed")
     ).select(key.alias("doc_id"))
-    path = os.path.join(out_dir, "extract")
-    tmp = os.path.join(out_dir, "extract__patch")
-    t0 = time.time()
     fresh = _extract_stage(new_docs.join(refresh_ids, "doc_id", "semi"))
     patched = (
-        spark.read.parquet(path)
+        mf.read_committed(spark, out_dir, old_rec)
         .join(F.broadcast(drop_keys), "doc_id", "anti")
         .unionByName(fresh)
     )
-    patched.write.mode("overwrite").parquet(tmp)
-    # ---- the guarded transition: sentinel -> swap -> marker(+clear).
-    # The sentinel commits atomically (temp+rename) BEFORE any
-    # destructive step; from here until _commit_stage replaces the
-    # marker and clears it, _stage_done reports the stage not-done, so
-    # no retry can re-apply the patch on top of patched data.
-    sent = _sentinel_path(out_dir, "extract")
-    sent_tmp = sent + ".tmp"
-    with open(sent_tmp, "w") as f:
-        json.dump(
-            {"old_snapshot": old_snapshot, "new_snapshot": new_snapshot}, f
-        )
-    os.replace(sent_tmp, sent)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
-    out = spark.read.parquet(path)
-    _commit_stage(
+    mf.write_committed(
+        patched,
         out_dir,
         "extract",
-        uuid.uuid4().hex[:12],
-        new_snapshot,
-        config_fp,
-        out.count(),
-        int((time.time() - t0) * 1000),
+        {
+            "run_id": uuid.uuid4().hex[:12],
+            "snapshot_id": new_snapshot,
+            "config_fp": config_fp,
+        },
+        patch={"old_snapshot": old_snapshot, "new_snapshot": new_snapshot},
     )
     summary = build_corpus(spark, new_input, out_dir, **overrides)
     summary["extract_patch"] = {

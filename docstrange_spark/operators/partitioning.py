@@ -5,32 +5,32 @@ The expensive part of most text operators here (shingle explosion,
 n-gram construction, posting-list tokenization, hashed-bigram
 features) runs *before* the first exchange — i.e. inside the scan
 stage. Scan parallelism is bounded by the input's split count, and a
-single-row-group parquet file (or a gzip file, or one fat file among
-small ones) yields one task: the whole map-side computation serializes
-onto one core no matter how many the cluster has. This is the "input
-skew: one huge unsplittable file" case of the optimization playbook
-(spark_optimization_guide.md §2.5), whose fix is "repartition
-immediately after the read".
+small input (a single-row-group parquet file, a few small files)
+yields one or a few tasks: the whole map-side computation serializes
+onto those cores no matter how many the session has.
 
-``spread`` applies that fix *adaptively*. The gate is the optimizer's
-size estimate for the plan, not the plan's partition count: asking a
-DataFrame for its partition count (``df.rdd``) forces AQE to finalize
-the plan, which *executes* every upstream shuffle stage — measured on
-this host: a probe on a join plan ran 2 Spark jobs before answering.
-The size estimate is driver-only and free. It is exact for bare file
-scans (the case this helper exists for) and wildly *over*-estimated
-for joins/checkpoints, which makes overshoot the safe direction: an
+``spread`` is a **parallelism floor for small inputs**. The gate is
+the optimizer's size estimate for the plan, not the plan's partition
+count: asking a DataFrame for its partition count (``df.rdd``) forces
+AQE to finalize the plan, which *executes* every upstream shuffle
+stage — measured on this host: a probe on a join plan ran 2 Spark jobs
+before answering. The size estimate is driver-only and free. It is
+exact for bare file scans and wildly *over*-estimated for
+joins/checkpoints, which makes overshoot the safe direction: an
 operator fed by upstream shuffles skips the extra exchange it does not
 need.
 
 The repartition fires only when the estimated input is at most
 ``parallelism x 4 MiB`` — small enough that the added exchange moves a
 trivial number of bytes once, while unlocking every core for the
-map-heavy stage above it. At 100 TB (or any healthy multi-split scan)
-the estimate is far above the gate and ``spread`` is a no-op; the
-threshold scales with the session's parallelism, never a hard-coded
-local constant. The key is a deterministic hash (never round-robin,
-which pays a sort and has retry-duplication hazards, guide §2.5).
+map-heavy stage above it. Because the gate is on total bytes, a LARGE
+unsplittable file (the "one huge unsplittable file" case of
+spark_optimization_guide.md §2.5) is above it and is NOT spread; that
+needs a gate on bytes per split, which is open work. At 100 TB (or any
+healthy multi-split scan) ``spread`` is a no-op; the threshold scales
+with the session's parallelism, never a hard-coded local constant.
+The key is a deterministic hash (never round-robin, which pays a sort
+and has retry-duplication hazards, guide §2.5).
 
 Results are unaffected: every consumer is a grouping/join/aggregation
 keyed at least by the repartition key, so per-key row locality and
@@ -50,7 +50,9 @@ _BYTES_PER_CORE = 4 * 1024 * 1024
 def spread(df: DataFrame, key_col: str) -> DataFrame:
     """Repartition ``df`` by ``xxhash64(key_col)`` to the session's
     default parallelism iff the optimizer's size estimate says the
-    whole input is tiny (see module docstring). No-op otherwise."""
+    whole input is at most ``parallelism x 4 MiB`` — a parallelism
+    floor for small inputs (see module docstring). No-op otherwise,
+    including on a large unsplittable file."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if target <= 1:

@@ -219,18 +219,19 @@ def phrase_search(
     grams = text_analysis.word_ngrams(
         text_analysis.nonempty_tokens(text_col), n
     )
-    t = df.select(
-        F.col(id_col).alias("doc_id"), grams.alias("grams")
-    ).select(
-        "doc_id",
-        F.size(F.filter(F.col("grams"), lambda g: g == target))
+    hit = text_analysis.bind(grams, lambda g: F.struct(
+        F.size(F.filter(g, lambda x: x == target))
         .cast("long")
         .alias("n_occurrences"),
-        (F.array_position(F.col("grams"), target) - 1)
-        .cast("long")
-        .alias("first_pos"),
+        (F.array_position(g, target) - 1).cast("long").alias("first_pos"),
+    ))
+    # the match is bound once and emitted through a 0-or-1-element array:
+    # a where() on it would be pushed below the projection, building the
+    # grams a second time inside the filter
+    return df.select(
+        F.col(id_col).alias("doc_id"),
+        F.inline(F.filter(F.array(hit), lambda h: h["n_occurrences"] > 0)),
     )
-    return t.where(F.col("n_occurrences") > 0)
 
 
 def proximity_search(
@@ -275,13 +276,15 @@ def proximity_search(
             ))),
         ))
 
-    out = df.select(
+    dist = text_analysis.bind(
+        text_analysis.nonempty_tokens(text_col), min_dist
+    ).cast("long")
+    # emitted through a 0-or-1-element array, like phrase_search: a
+    # where() would be pushed below the projection and fold twice
+    return df.select(
         F.col(id_col).alias("doc_id"),
-        text_analysis.bind(text_analysis.nonempty_tokens(text_col), min_dist)
-        .cast("long")
-        .alias("min_dist"),
+        F.explode(F.filter(F.array(dist), lambda d: d <= window)).alias("min_dist"),
     )
-    return out.where(F.col("min_dist") <= window)
 
 
 def passage_corpus(docs: DataFrame) -> DataFrame:

@@ -47,6 +47,34 @@ def test_cli_resume_mode(spark, tmp_path):
     assert "json" in data.columns
 
 
+def test_resume_config_change_reruns(spark, tmp_path, capsys):
+    """--resume records are keyed on (input snapshot, config): a rerun
+    with another --output-format reprocesses every bucket instead of
+    keeping the first format's data, and a repeated run skips them all
+    (15 docs over 16 buckets leave buckets empty; those commit as done
+    too)."""
+    import json
+
+    src = str(tmp_path / "spans_in")
+    out = str(tmp_path / "resumable_out")
+    datagen.fixture_spans(spark).write.parquet(src)
+
+    def run(fmt):
+        capsys.readouterr()
+        assert cli.main([src, "--out", out, "--output-format", fmt,
+                         "--resume", "--cpus", "4"]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert run("json")["processed_buckets"] == list(range(16))
+    assert run("markdown")["processed_buckets"] == list(range(16))
+    data = spark.read.option("mergeSchema", "true").parquet(out + "/data")
+    assert "json" not in data.columns and "markdown" in data.columns
+    assert data.count() == 15
+    again = run("markdown")
+    assert again["processed_buckets"] == []
+    assert again["skipped_buckets"] == list(range(16))
+
+
 def test_span_table_helpers(spark, tmp_path):
     p = str(tmp_path / "st")
     df = datagen.fixture_spans(spark)

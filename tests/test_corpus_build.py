@@ -9,6 +9,7 @@ import os
 import pytest
 
 from docstrange_spark.operators import corpus, dedup
+from docstrange_spark.sources import manifest
 
 SF = "/root/testdata/sf0.001"
 
@@ -90,12 +91,32 @@ def test_build_corpus_config_change_invalidates(spark, tmp_path, docs_path):
     assert packed.where(F.col("batch_id") > 0).count() > 0
 
 
+def test_stage_commit_runs_no_job(spark, tmp_path, docs_path):
+    """A fresh stage runs the jobs of its write and nothing more: the row
+    count rides the write as an observed metric and the committed output
+    is re-read with the written schema (no schema inference job, no
+    count())."""
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    staged = jobs(f"stage-{tmp_path.name}", lambda: corpus.build_corpus(
+        spark, docs_path, str(tmp_path / "c"), stop_after="extract"))
+    plain = jobs(f"plain-{tmp_path.name}", lambda: corpus._extract_stage(
+        spark.read.parquet(docs_path)).write.parquet(str(tmp_path / "plain")))
+    assert staged == plain
+
+
 def test_snapshot_id_sees_same_size_rewrite(spark, tmp_path, docs_path):
     """Rewriting a part file in place at equal size (same name, same
     size, later mtime) is a new input snapshot: the id changes and a
     rerun recomputes the extract stage instead of reusing it."""
-    from docstrange_spark.sources import manifest
-
     src = str(tmp_path / "src")
     spark.read.parquet(docs_path).coalesce(1).write.parquet(src)
     part = next(
@@ -120,8 +141,6 @@ def test_snapshot_id_of_single_file(tmp_path, docs_path):
     """A single-file input is fingerprinted as itself, not as an empty
     directory walk: the id differs from the empty input's and follows
     the file's mtime."""
-    from docstrange_spark.sources import manifest
-
     empty = str(tmp_path / "empty")
     os.makedirs(empty)
     f = str(tmp_path / "docs.parquet")
@@ -285,15 +304,14 @@ def test_update_corpus_torn_patch_recovers(spark, tmp_path, docs_path):
     shutil.copytree(
         os.path.join(fresh_dir, "extract"), os.path.join(out, "extract")
     )
-    sent = corpus._sentinel_path(out, "extract")
+    sent = manifest._sentinel_path(out, "extract")
     with open(sent, "w") as f:
         f.write('{"old_snapshot": "x", "new_snapshot": "y"}')
 
     # with the sentinel present the stage is NOT done, regardless of
     # what the (stale) marker says
-    assert not corpus._stage_done(
-        out, "extract", "anything", "anything"
-    )
+    lineage = json.load(open(os.path.join(out, "_STAGE_extract.json")))
+    assert manifest.committed(out, "extract", lineage) is None
 
     s = corpus.update_corpus(spark, old_p, new_p, out)
     assert s["extract_patch"] == {"recovered_from_torn_patch": True}

@@ -152,13 +152,15 @@ def test_manifest_resume(spark, documents, tmp_path):
     # first run: only the first wave commits (simulate kill via n_buckets
     # slicing: run with a restricted bucket list by monkey wave_size)
     full = manifest.process_resumable(
-        spans, out_dir, process, snap, n_buckets=8, wave_size=3
+        spans, out_dir, process, snap, {"process": "markdown"},
+        n_buckets=8, wave_size=3,
     )
     assert sorted(full["processed_buckets"]) == list(range(8))
 
     # rerun: everything already committed -> nothing reprocessed
     again = manifest.process_resumable(
-        spans, out_dir, process, snap, n_buckets=8, wave_size=3
+        spans, out_dir, process, snap, {"process": "markdown"},
+        n_buckets=8, wave_size=3,
     )
     assert again["processed_buckets"] == []
     assert sorted(again["skipped_buckets"]) == list(range(8))
@@ -168,6 +170,79 @@ def test_manifest_resume(spark, documents, tmp_path):
     m = manifest.manifest_summary(spark, out_dir)
     assert m.select("bucket").distinct().count() == 8
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 64
+
+
+def test_resume_new_snapshot_drops_stale_buckets(spark, documents, tmp_path):
+    """A rerun over a new input snapshot rewrites each bucket whole: a
+    bucket that is empty in the new input keeps no rows of the old one."""
+    out_dir = str(tmp_path / "stale")
+    spans = spanize.spanize(documents.limit(64))
+    newer = spans.where(F.pmod(F.xxhash64("doc_id"), F.lit(8)) != 3)
+
+    def process(df):
+        return ex.extract(df, salt=False).select("doc_id", "n_blocks")
+
+    manifest.process_resumable(spans, out_dir, process, "old", {}, n_buckets=8)
+    manifest.process_resumable(newer, out_dir, process, "new", {}, n_buckets=8)
+    got = manifest.read_output(spark, out_dir).select("doc_id").collect()
+    want = newer.select("doc_id").collect()
+    assert len(want) < 64 and sorted(got) == sorted(want)
+
+
+def _jobs(spark, group, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_records_exact_and_commit_runs_no_job(spark, tmp_path):
+    """The per-bucket records come from metrics observed on the wave's
+    own input and output, and equal independent per-bucket aggregates
+    over the input spans and the written rows. A wave runs only its
+    write (the salt shuffle's map stage plus the write job): no stats
+    pass and no read-back. A rerun over committed buckets runs no Spark
+    job at all."""
+    src = "/root/testdata/sf0.01/documents.parquet"
+    spans = spanize.spanize(spark.read.parquet(src))
+    out_dir = str(tmp_path / "exact")
+
+    def run(group):
+        return _jobs(spark, group, lambda: manifest.process_resumable(
+            spans, out_dir, lambda df: ex.extract(df, formats=("json",)),
+            manifest.snapshot_id_of(src), {"formats": ["json"]},
+        ))
+
+    first, n_first = run(f"resume-first-{tmp_path.name}")
+    assert first["processed_buckets"] == list(range(16))
+    assert n_first <= 2 * 4  # 16 buckets in 4 waves
+    again, n_again = run(f"resume-again-{tmp_path.name}")
+    assert again["processed_buckets"] == [] and n_again == 0
+
+    bucket = F.pmod(F.xxhash64("doc_id"), F.lit(16)).cast("int").alias("bucket")
+    want_in = {
+        r["bucket"]: (r["n_docs"], r["n_spans"])
+        for r in spans.groupBy(bucket).agg(
+            F.count("*").alias("n_docs"), F.sum(F.size("spans")).alias("n_spans")
+        ).collect()
+    }
+    want_out = {
+        r["bucket"]: r["n_blocks"]
+        for r in manifest.read_output(spark, out_dir)
+        .groupBy("bucket").agg(F.sum("n_blocks").alias("n_blocks")).collect()
+    }
+    got = {
+        r["bucket"]: (r["n_docs"], r["n_spans"], r["n_blocks"])
+        for r in manifest.manifest_summary(spark, out_dir).collect()
+    }
+    assert got == {
+        b: (*want_in.get(b, (0, 0)), want_out.get(b, 0)) for b in range(16)
+    }
+    assert sum(n for n, _ in want_in.values()) == spark.read.parquet(src).count()
 
 
 def test_lsh_hot_bucket_cap_chain(spark):

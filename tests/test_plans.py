@@ -264,6 +264,17 @@ def test_no_split_inside_lambda(docs, name):
     ]
 
 
+@pytest.mark.parametrize("name", ["phrase_search", "proximity_search"])
+def test_search_tokenizes_once(docs, name):
+    """A where() on a projected search result is pushed below the
+    projection, which evaluates the grams or the distance fold a second
+    time inside the filter. The per-row result is bound once and emitted
+    through a filtered 0-or-1-element array instead, so the optimized
+    plan splits each text exactly once."""
+    df = SPLIT_IN_LAMBDA_CASES[name](docs)
+    assert plans.optimized_plan(df).count("split(") == 1, plans.optimized_plan(df)
+
+
 def test_streaming_near_dup_signatures_run_jvm_side(spark, tmp_path):
     """streaming_near_dup signs and bands documents with built-in
     expressions only: in the executed micro-batch plan the
